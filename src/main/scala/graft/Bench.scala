@@ -237,17 +237,22 @@ object Bench {
     if (!suiteStatus.startsWith("green"))
       System.err.println(s"[bench] WARNING: test suite status is '$suiteStatus' — " +
         "this bench record is stamped accordingly; run a full `sbt test` to green before shipping")
+    // A query holding the -1.0 failure sentinel after every pass.
+    def failedOf(queries: Seq[(String, Any)], best: Map[String, Double]): Seq[String] =
+      queries.map(_._1).filter(name => best.getOrElse(name, -1.0) < 0)
     def render(metric: String, queries: Seq[(String, Any)], best: Map[String, Double],
                passTotals: Seq[Double], loadBefore: String, loadAfter: String): String = {
       val results = queries.map { case (name, _) => name -> best.getOrElse(name, -1.0) }
       val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-      // Failure sentinels stay visible per-query but don't corrupt the sum.
+      // Failure sentinels stay visible per-query but don't corrupt the sum;
+      // "failed" names them so a smaller total can't pass for a faster one.
       val total = results.map(_._2).filter(_ >= 0).sum
+      val failed = failedOf(queries, best).map("\"" + _ + "\"").mkString("[", ",", "]")
       val passes = passTotals.map(t => f"$t%.3f").mkString("[", ",", "]")
       // wall = emission time (epoch ms): lets a consumer of bench_out.json
       // tell a fresh record from a stale one left by an earlier run.
-      s"""{"metric":"$metric","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"load":"before=$loadBefore after=$loadAfter","tests":"$suiteStatus","wall":${System.currentTimeMillis()}}"""
+      s"""{"metric":"$metric","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","passes":$passes,"load":"before=$loadBefore after=$loadAfter","tests":"$suiteStatus","wall":${System.currentTimeMillis()}}"""
     }
     // Two anchor sets, two JSON lines. "total" is the q01–q40 BASELINE.md
     // DuckDB anchor set — kept first and format-identical so the
@@ -284,5 +289,10 @@ object Bench {
     }
     spark.stop()
     lines.foreach(println)
+    val failed = failedOf(core, coreBest) ++ failedOf(ext, extBest)
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1231,7 +1231,7 @@ object Approx {
     // measured graph NEEDED more partitions than the cluster has cores —
     // exactly the 100 TB case where capping re-creates the oversized
     // partitions the 1M target exists to prevent. At bench scale the cap
-    // never bound (5M directed edges → 5 ≤ 32), so this is purely a
+    // never bound (5M directed edges → 6 ≤ 32), so this is purely a
     // scale-correctness fix; a width above core count just means several
     // waves of in-memory tasks, never an OOM-sized partition.
     def partsFor(undirected: Long): Int =
@@ -1247,7 +1247,7 @@ object Approx {
       // evaluation, so it stays at cluster parallelism; everything
       // AFTER this line — the level-0 re-key, its join, the distinct —
       // runs at the 1M-directed-edges-per-partition target instead of a
-      // fixed 32 (sf0.1: 5 partitions; a 100 TB graph: E/1M, above
+      // fixed 32 (sf0.1: 6 partitions; a 100 TB graph: E/1M, above
       // core count when the data demands it).
       val directed0 = curEdges.count()
       tick(s"edges directed=$directed0 level0parts=${partsFor(directed0 / 2)}")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
@@ -12,10 +11,10 @@ import graft.operators.Approx.MinHashIndex
   * screen ([[graft.operators.Approx.incrementalDedup]] / declared q86).
   * Incremental dedup is INHERENTLY micro-batch shaped: an "increment"
   * is a batch of newly crawled documents, so the streaming form is the
-  * batch operator driven by foreachBatch around the index-advance loop
-  * ([[graft.operators.Approx.advanceIndex]]): each microbatch's
-  * signatures FOLD into the advanced index (flagged `inc = true` —
-  * crawl provenance), and the batch is screened against
+  * batch operator driven per microbatch ([[FoldScreen]]) around the
+  * index-advance loop ([[graft.operators.Approx.advanceIndex]]): each
+  * microbatch's signatures FOLD into the advanced index (flagged
+  * `inc = true` — crawl provenance), and the batch is screened against
   * (static index ∪ all folded batches). A batch doc pairing a PREVIOUS
   * batch's doc is therefore `dup_new` (both are increment docs), never
   * `dup_old` — the provenance flag is exactly what keeps the fold from
@@ -23,22 +22,26 @@ import graft.operators.Approx.MinHashIndex
   * are invariant to the batch's own signatures already being in the
   * index (a doc never pairs itself — `doc_id` inequality — and a
   * batch-mate pair found through the folded copy is the same pair the
-  * increment side emits), which is what makes a foreachBatch RETRY of
+  * increment side emits), which is what makes a microbatch RETRY of
   * the same batch id a no-op rather than a double-count
   * (StreamingSpec pins both properties).
   *
-  * Durability: with `stateDir` set, each batch's (sets, bands) append
-  * to parquet under one `batch_id=` partition via DYNAMIC partition
+  * Durability: each batch's (sets, bands) append to parquet under one
+  * `batch_id=` partition of the state directory via DYNAMIC partition
   * overwrite — a retried batch REPLACES its own partition instead of
-  * duplicating it, and a RESTARTED stream (same checkpoint + same
+  * duplicating it — and every screen reads the whole directory back,
+  * so state never accumulates in driver memory or plan depth. With
+  * `stateDir` set, a RESTARTED stream (same checkpoint + same
   * stateDir) reads every previously folded batch back before its
   * first trigger, so post-restart near-dups of pre-restart docs still
-  * screen correctly. Without `stateDir` the folded state is held in
-  * memory only: a restart forgets it — use a fresh checkpoint dir and
-  * re-feed the stream, or pass `stateDir`. The state grows with the
-  * STREAM (one partition per batch, signatures only — never text) and
-  * is independent of the static index; compaction of a long-running
-  * stream's many small partitions is the caller's retention policy.
+  * screen correctly. `stateDir = None` means a scratch directory owned
+  * by the writer (created per `writer` call, deleted at JVM exit):
+  * retries are just as idempotent, but a restart forgets the state —
+  * use a fresh checkpoint dir and re-feed the stream, or pass
+  * `stateDir`. The state grows with the STREAM (one partition per
+  * batch, signatures only — never text) and is independent of the
+  * static index; compaction of a long-running stream's many small
+  * partitions is the caller's retention policy.
   *
   * Ordering contract (same as the batch [[Approx.advanceIndex]]
   * replay): feed batches MONOTONE in doc_id and the emitted verdicts
@@ -88,70 +91,10 @@ object StreamingIncrementalDedup {
              increments: DataFrame, stateDir: Option[String])
             (onBatch: (Long, DataFrame) => Unit): DataStreamWriter[Row] = {
     graft.expressions.GraftFunctions.register(spark)
-    // In-memory fold state (stateDir == None): accumulated signature
-    // frames (each batch's chain localCheckpointed once — lineage per
-    // batch stays bounded) plus the batch ids already folded, so a
-    // foreachBatch retry screens without re-folding. The accumulated
-    // UNION is itself re-checkpointed every CollapseEvery folds:
-    // without that, the driver-side plan grows one union level per
-    // batch for the stream's lifetime (linear analysis cost, eventual
-    // StackOverflow in analysis on a long-lived stream) — the collapse
-    // bounds plan depth at CollapseEvery for an amortized
-    // O(state / CollapseEvery) extra materialization per batch.
-    var extra: Option[(DataFrame, DataFrame)] = None
-    val folded = scala.collection.mutable.Set.empty[Long]
-    increments.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // The microbatch frame belongs to the stream's CLONED session,
-        // whose function registry snapshot predates any registration
-        // the batch operator performs — rebind the (already
-        // materialized) batch to the caller's session so the dedup
-        // plan analyzes where band_match_before lives.
-        val cp = batch.select("doc_id", "text").localCheckpoint()
-        val b = spark.createDataFrame(cp.rdd, cp.schema)
-        val verdicts = stateDir match {
-          case Some(dir) => foldAndScreen(spark, index, dir, b, id)
-          case None =>
-            val (setsB, bandsB) = Approx.md5SetsAndBands(spark, b)
-            // An empty batch folds nothing (and never enters `folded`:
-            // there is no state to retry-protect) — unioning empty
-            // frames would only deepen the plan chain.
-            if (!folded.contains(id) && !b.isEmpty) {
-              val sb = setsB.localCheckpoint(true)
-              val bb = bandsB.localCheckpoint(true)
-              extra = Some(extra match {
-                case Some((es, eb)) => (es.unionByName(sb), eb.unionByName(bb))
-                case None => (sb, bb)
-              })
-              folded += id
-              if (folded.size % CollapseEvery == 0)
-                extra = extra.map { case (es, eb) =>
-                  (es.localCheckpoint(true), eb.localCheckpoint(true)) }
-            }
-            Approx.incrementalDedup(spark, advanced(index, extra), b)
-        }
-        onBatch(id, verdicts.localCheckpoint())
-      }
+    val dir = stateDir.getOrElse(FoldScreen.scratchDir(spark))
+    FoldScreen.writer(spark, increments, Seq("doc_id", "text"))(
+      foldAndScreen(spark, index, dir, _, _))(onBatch)
   }
-
-  /** Collapse the in-memory fold's union chain every N batches (see
-    * the comment in [[writer]]). Shared by the semantic twin. */
-  private[streaming] val CollapseEvery = 32
-
-  /** The static index with the folded-batch frames attached
-    * (`inc = true` — crawl provenance for the verdict CASE). */
-  private def advanced(index: MinHashIndex,
-                       extra: Option[(DataFrame, DataFrame)]): MinHashIndex =
-    extra match {
-      case None => index
-      case Some((es, eb)) =>
-        val idxBands =
-          if (index.bands.columns.contains("inc")) index.bands
-          else index.bands.withColumn("inc", lit(false))
-        MinHashIndex(index.sets.unionByName(es),
-          idxBands.unionByName(eb.withColumn("inc", lit(true))))
-    }
 
   /** Durable fold-then-screen for one batch: write the batch's
     * signatures as the `batch_id = id` partition of `stateDir`'s two
@@ -162,9 +105,9 @@ object StreamingIncrementalDedup {
     * schema-inference read then crashes the stream) and screens
     * against whatever state already exists; the state read takes the
     * batch chain's explicit schema, so even a data-less directory
-    * reads as an empty fold ([[graft.sources.StateStore]]). Exposed so
-    * restart/retry scenarios are testable without driving a real
-    * stream. */
+    * reads as an empty fold ([[graft.sources.StateStore]]). Returns
+    * the verdicts materialized. Exposed so restart/retry scenarios are
+    * testable without driving a real stream. */
   private[graft] def foldAndScreen(spark: SparkSession, index: MinHashIndex,
                                    stateDir: String, batch: DataFrame,
                                    id: Long): DataFrame = {
@@ -174,10 +117,10 @@ object StreamingIncrementalDedup {
       StateStore.writePartition(setsB, s"$stateDir/sets", id)
       StateStore.writePartition(bandsB, s"$stateDir/bands", id)
     }
-    val extra = (
+    val advanced = Approx.advanceIndexPrebuilt(index,
       StateStore.readFolded(spark, s"$stateDir/sets", setsB.schema),
       StateStore.readFolded(spark, s"$stateDir/bands", bandsB.schema))
-    Approx.incrementalDedup(spark, advanced(index, Some(extra)), batch)
+    Approx.incrementalDedup(spark, advanced, batch).localCheckpoint()
   }
 
   /** Start the stream and return the query (test convenience). */

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
@@ -24,17 +23,17 @@ import graft.operators.Approx.SemanticIndex
   * screen: verdicts are invariant to the batch's own vectors already
   * being in the index (a vector never pairs itself, and a batch-mate
   * pair found through the folded copy is the same pair the increment
-  * side emits), so a foreachBatch RETRY of the same batch id is a
+  * side emits), so a microbatch RETRY of the same batch id is a
   * no-op rather than a double-count.
   *
-  * Durability: with `stateDir` set, each batch's assigned vectors
-  * append to parquet under one `batch_id=` partition via DYNAMIC
-  * partition overwrite (retry replaces, restart reads back — the same
-  * contract, mechanism, and caveats as the lexical twin; the centroid
-  * table itself is static and persists via
-  * [[Approx.semanticCentroidsDF]]). Without `stateDir` the folded
-  * state is in-memory only: a restart forgets it — use a fresh
-  * checkpoint dir and re-feed, or pass `stateDir`.
+  * Durability: each batch's assigned vectors append to parquet under
+  * one `batch_id=` partition of the state directory via DYNAMIC
+  * partition overwrite, and every screen reads the directory back —
+  * the same single mode, contract and caveats as the lexical twin
+  * (retry replaces; with `stateDir` set a restart reads back;
+  * `stateDir = None` is a writer-owned scratch directory, so a restart
+  * forgets). The centroid table itself is static and persists via
+  * [[Approx.semanticCentroidsDF]].
   *
   * Ordering contract: feed batches MONOTONE in vec_id and the emitted
   * verdicts equal the single-shot batch run row-for-row. On an
@@ -63,56 +62,10 @@ object StreamingIncrementalSemantic {
              stateDir: Option[String] = None)
             (onBatch: (Long, DataFrame) => Unit): DataStreamWriter[Row] = {
     graft.expressions.GraftFunctions.register(spark)
-    // In-memory fold state (stateDir == None): accumulated assigned-
-    // vector frames (each batch assigned + localCheckpointed once)
-    // plus the batch ids already folded, so a retry screens without
-    // re-folding. The accumulated union re-checkpoints every
-    // CollapseEvery folds — bounded driver-side plan depth on a
-    // long-lived stream (see the lexical twin's comment).
-    var extra: Option[DataFrame] = None
-    val folded = scala.collection.mutable.Set.empty[Long]
-    increments.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // The microbatch frame belongs to the stream's CLONED session,
-        // whose function registry snapshot predates any registration
-        // the batch operator performs — rebind the (already
-        // materialized) batch to the caller's session so the dedup
-        // plan analyzes where float_dot/mip_assign live.
-        val cp = batch.select("vec_id", "embedding").localCheckpoint()
-        val b = spark.createDataFrame(cp.rdd, cp.schema)
-        val verdicts = stateDir match {
-          case Some(dir) => foldAndScreen(spark, index, dir, b, id, minSim)
-          case None =>
-            // Empty batches fold nothing — no state to retry-protect,
-            // and the union chain shouldn't deepen for zero rows.
-            if (!folded.contains(id) && !b.isEmpty) {
-              val vb = Approx.buildSemanticIndex(b, index.centroids)
-                .vectors.localCheckpoint(true)
-              extra = Some(extra.map(_.unionByName(vb)).getOrElse(vb))
-              folded += id
-              if (folded.size % StreamingIncrementalDedup.CollapseEvery == 0)
-                extra = extra.map(_.localCheckpoint(true))
-            }
-            Approx.incrementalSemanticDedup(advanced(index, extra), b, minSim)
-        }
-        onBatch(id, verdicts.localCheckpoint())
-      }
+    val dir = stateDir.getOrElse(FoldScreen.scratchDir(spark))
+    FoldScreen.writer(spark, increments, Seq("vec_id", "embedding"))(
+      foldAndScreen(spark, index, dir, _, _, minSim))(onBatch)
   }
-
-  /** The static index with the folded-batch vectors attached
-    * (`inc = true` — crawl provenance for the verdict CASE). */
-  private def advanced(index: SemanticIndex,
-                       extra: Option[DataFrame]): SemanticIndex =
-    extra match {
-      case None => index
-      case Some(ev) =>
-        val idxVecs =
-          if (index.vectors.columns.contains("inc")) index.vectors
-          else index.vectors.withColumn("inc", lit(false))
-        SemanticIndex(idxVecs.unionByName(ev.withColumn("inc", lit(true))),
-          index.centroids)
-    }
 
   /** Durable fold-then-screen for one batch: write the batch's
     * assigned vectors as the `batch_id = id` partition of `stateDir`'s
@@ -122,8 +75,9 @@ object StreamingIncrementalSemantic {
     * screens against existing state; the read takes the batch chain's
     * explicit schema so a data-less state directory reads as an empty
     * fold instead of crashing schema inference (the lexical twin's
-    * contract, [[graft.sources.StateStore]]). Exposed so restart/retry
-    * scenarios are testable without driving a real stream. */
+    * contract, [[graft.sources.StateStore]]). Returns the verdicts
+    * materialized. Exposed so restart/retry scenarios are testable
+    * without driving a real stream. */
   private[graft] def foldAndScreen(spark: SparkSession, index: SemanticIndex,
                                    stateDir: String, batch: DataFrame,
                                    id: Long, minSim: Double): DataFrame = {
@@ -131,8 +85,9 @@ object StreamingIncrementalSemantic {
     val vb = Approx.buildSemanticIndex(batch, index.centroids).vectors
     if (!batch.isEmpty)
       StateStore.writePartition(vb, s"$stateDir/vectors", id)
-    val extra = StateStore.readFolded(spark, s"$stateDir/vectors", vb.schema)
-    Approx.incrementalSemanticDedup(advanced(index, Some(extra)), batch, minSim)
+    val advanced = Approx.advanceSemanticIndexAssigned(index,
+      StateStore.readFolded(spark, s"$stateDir/vectors", vb.schema))
+    Approx.incrementalSemanticDedup(advanced, batch, minSim).localCheckpoint()
   }
 
   /** Start the stream and return the query (test convenience). */

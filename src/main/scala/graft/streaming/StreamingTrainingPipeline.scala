@@ -15,10 +15,11 @@ import graft.operators.TrainingData
   * advances with O(batch) `batch_id=` partition appends
   * ([[TrainingData.appendPipelineDay]]).
   *
-  * State is durable by construction (there is no in-memory mode): the
+  * State is durable and caller-owned (`stateDir` is required; the
+  * per-family twins' writer-owned scratch default does not apply): the
   * composed state includes the FINGERPRINT SET, whose screen — unlike
   * the per-family near-dup joins — is not self-pair-proof (a doc's own
-  * folded fp would shadow it on a foreachBatch retry). The retry fence
+  * folded fp would shadow it on a microbatch retry). The retry fence
   * is therefore load-time, not verdict-time: batch N loads state
   * bounded at `batch_id < N`
   * ([[TrainingData.loadDurablePipelineState]]'s `beforeBatch`), so a
@@ -67,26 +68,17 @@ object StreamingTrainingPipeline {
              arrivalOrder: Boolean = false,
              md5Fps: Boolean = false,
              report: Boolean = false)
-            (onBatch: (Long, DataFrame) => Unit): DataStreamWriter[Row] = {
-    increments.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // Rebind the materialized batch to the caller's session (the
-        // stream's cloned session predates the expression registry the
-        // dedup stages register — the per-family twins' seam).
-        val cp = batch.select("doc_id", "text", "lang").localCheckpoint()
-        val b = spark.createDataFrame(cp.rdd, cp.schema)
-        onBatch(id, processBatch(spark, stateDir, b, id, benchmark, budgets,
-          minJaccard, minBenchContainment, minQuality, maxRepetition,
-          minTokens, salt, embeddings, benchmarkEmbeddings, minCosine,
-          substrK, arrivalOrder, md5Fps, report))
-      }
-  }
+            (onBatch: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
+    FoldScreen.writer(spark, increments, Seq("doc_id", "text", "lang"))(
+      processBatch(spark, stateDir, _, _, benchmark, budgets, minJaccard,
+        minBenchContainment, minQuality, maxRepetition, minTokens, salt,
+        embeddings, benchmarkEmbeddings, minCosine, substrK, arrivalOrder,
+        md5Fps, report))(onBatch)
 
-  /** One microbatch's load-fenced screen-and-fold — the foreachBatch
-    * body, exposed (like the per-family twins' foldAndScreen) so
-    * restart/retry scenarios are testable without driving a real
-    * stream. Returns the batch's admissions, materialized. */
+  /** One microbatch's load-fenced screen-and-fold — the step
+    * [[FoldScreen]] runs per microbatch, exposed (like the per-family
+    * twins' foldAndScreen) so restart/retry scenarios are testable
+    * without driving a real stream. Returns the batch's admissions, materialized. */
   private[graft] def processBatch(spark: SparkSession, stateDir: String,
                                   batch: DataFrame, id: Long,
                                   benchmark: DataFrame,

@@ -419,6 +419,26 @@ class IncrementalDedupSpec extends SparkSpec {
     val batch = SparkEntry.queries("q86_incremental_dedup")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert((day1Late ++ first).sortBy(_._1).toSeq === batch.toSeq)
+    // The semantic twin's fold: same contract over its `vectors` table.
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val isNewVec = pmod(col("vec_id"), lit(10)) >= 7
+    val semIdx = graft.operators.Approx.buildSemanticIndex(emb.filter(!isNewVec),
+      graft.ops.Extended.Q84Centroids.map(_.map(_.toDouble)))
+    val incVecs = emb.filter(isNewVec).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    val Seq(vday1, vday2) = days(incVecs, 2).map(_.toDF("vec_id", "embedding"))
+    val semDir = java.nio.file.Files.createTempDirectory("graft_semretry").toString
+    def semFold(day: org.apache.spark.sql.DataFrame, id: Long) =
+      graft.streaming.StreamingIncrementalSemantic
+        .foldAndScreen(spark, semIdx, semDir, day, id, 0.35)
+        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    semFold(vday1, 0L)
+    val semFirst = semFold(vday2, 1L)
+    val vecRows = spark.read.parquet(s"$semDir/vectors").count()
+    assert(semFold(vday2, 1L).toSeq === semFirst.toSeq, "semantic retry changed verdicts")
+    assert(spark.read.parquet(s"$semDir/vectors").count() === vecRows,
+      "semantic retry duplicated the batch's folded vectors")
   }
 
   test("declared replays: q90 ≡ q86 and q91 ≡ q88 (sf0.001)") {

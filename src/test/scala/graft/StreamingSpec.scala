@@ -670,11 +670,12 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming incremental dedup: stateDir survives a stream restart") {
     import spark.implicits._
-    // The restart hole the in-memory twin documents away: kill the
-    // stream after two batches, start a SECOND stream over the same
-    // stateDir, feed the rest — the folded signatures read back from
-    // parquet, so post-restart near-dups of pre-restart docs still
-    // screen dup_new. Verdict union must equal the single-shot q86.
+    // What a caller-owned stateDir buys over the writer-owned scratch
+    // default (which a restart forgets): kill the stream after two
+    // batches, start a SECOND stream over the same stateDir, feed the
+    // rest — the folded signatures read back from parquet, so
+    // post-restart near-dups of pre-restart docs still screen dup_new.
+    // Verdict union must equal the single-shot q86.
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "text")
     val isNew = pmod(col("doc_id"), lit(10)) >= 7
@@ -691,7 +692,7 @@ class StreamingSpec extends SparkSpec {
       docs.filter(!isNew), stream1.toDF().toDF("doc_id", "text"), Some(dir))(onBatch)
     try batches.take(2).foreach { b => stream1.addData(b.toSeq); q1.processAllAvailable() }
     finally q1.stop()
-    // Fresh stream, fresh in-memory everything — only stateDir persists.
+    // Fresh stream, fresh driver-side everything — only stateDir persists.
     // Its batch ids restart at 0: the fold is keyed by (stateDir,
     // batch_id), so the second stream's partitions would COLLIDE with
     // the first's. A real deployment either resumes from the same
