@@ -14,38 +14,56 @@ import org.apache.spark.sql.SparkSession
   * the per-query minimum reported.
   */
 object Bench {
-  /** Runs `mk()` and reports how many QUERY-EXECUTION jobs its
-    * evaluation launched.
+  /** What one [[measure]] window did. `jobs` counts QUERY-EXECUTION
+    * jobs only (see [[measure]]); the task figures sum every task of
+    * every other job started in the window — executor CPU (run plus
+    * deserialize), shuffle-write bytes and records, disk spill, and each
+    * task's duration in ms. `wallNs` times `mk()` alone, not the flush. */
+  final case class Work(jobs: Int, wallNs: Long, cpuNs: Long,
+                        shuffleWriteBytes: Long, shuffleRecords: Long,
+                        spillBytes: Long, taskMs: Seq[Long]) {
+    def sec: Double = wallNs / 1e9
+  }
+
+  /** Runs `mk()` and reports what its evaluation did.
     *
-    * Used to detect queries that do eager work while their DataFrame is
-    * CONSTRUCTED (q60's checkpointed clustering loop): caching such a
-    * query's DataFrame across bench passes would time only its final
-    * assembly. Detection replaces the previous hand-maintained exemption
-    * set, which would have silently mis-benched any future
-    * eager-at-construction query.
+    * Bench uses `jobs` to detect queries that do eager work while their
+    * DataFrame is CONSTRUCTED (q60's checkpointed clustering loop):
+    * caching such a query's DataFrame across bench passes would time
+    * only its final assembly. Detection replaces the previous
+    * hand-maintained exemption set, which would have silently
+    * mis-benched any future eager-at-construction query.
     *
-    * Only jobs carrying the `spark.sql.execution.id` property count —
-    * i.e. DataFrame actions (count/checkpoint/collect) run via
-    * SQLExecution during construction. Metadata RDD jobs that EVERY
-    * reader launches at analysis time (parquet footer schema inference,
-    * parallel file listing) carry no execution id and are excluded on
-    * purpose: they are part of planning, which the plan-reuse discipline
-    * deliberately keeps out of timed passes, exactly as DuckDB's
-    * prepared-statement anchor excludes its own catalog work. (An eager
-    * construction doing raw sc.runJob work would slip through; declared
-    * queries are DataFrame-first, so no such path exists here.)
+    * Only jobs carrying the `spark.sql.execution.id` property count
+    * toward `jobs` — i.e. DataFrame actions (count/checkpoint/collect)
+    * run via SQLExecution during construction. Metadata RDD jobs that
+    * EVERY reader launches at analysis time (parquet footer schema
+    * inference, parallel file listing) carry no execution id and are
+    * excluded on purpose: they are part of planning, which the
+    * plan-reuse discipline deliberately keeps out of timed passes,
+    * exactly as DuckDB's prepared-statement anchor excludes its own
+    * catalog work. (An eager construction doing raw sc.runJob work
+    * would slip through; declared queries are DataFrame-first, so no
+    * such path exists here.) Their tasks still count toward the task
+    * figures — that work did run.
     *
-    * Exactness without private APIs: listener-bus events are delivered
-    * FIFO, so after construction we run a sentinel job tagged with a
+    * Exactness without private APIs or sleeps: listener-bus events are
+    * delivered FIFO, so after `mk()` we run a sentinel job tagged with a
     * unique job group and wait until its start event is observed — at
-    * that point every job-start submitted during construction has been
-    * counted. The caller is single-threaded, so no unrelated jobs can
-    * land in the window.
+    * that point every job start and task end submitted during `mk()`
+    * has been delivered. Tasks count only for stages of jobs whose start
+    * the window saw, so the sentinel's own task and stale events from
+    * earlier work stay out. The caller is single-threaded, so no
+    * unrelated jobs can land in the window.
     */
-  def jobsDuringBuild[T](spark: SparkSession)(mk: () => T): (T, Int) = {
+  def measure[T](spark: SparkSession)(mk: () => T): (T, Work) = {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
     val sc = spark.sparkContext
     val sentinelGroup = "graft-bench-probe-" + java.util.UUID.randomUUID()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new AtomicInteger(0)
+    val cpuNs, shuffleBytes, shuffleRecs, spill = new AtomicLong(0)
+    val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -54,12 +72,28 @@ object Bench {
         val grp = props.map(_.getProperty("spark.jobGroup.id")).orNull
         val sqlExec = props.map(_.getProperty("spark.sql.execution.id")).orNull
         if (grp == sentinelGroup) sentinelSeen.countDown()
-        else if (sqlExec != null) jobs.incrementAndGet()
+        else {
+          js.stageIds.foreach(stages.add)
+          if (sqlExec != null) jobs.incrementAndGet()
+        }
+      }
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null && stages.contains(te.stageId)) {
+          cpuNs.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime)
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          shuffleRecs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+          spill.addAndGet(m.diskBytesSpilled)
+          if (te.taskInfo != null) taskMs.add(te.taskInfo.duration)
+        }
       }
     }
     sc.addSparkListener(listener)
     try {
+      val t0 = System.nanoTime()
       val built = mk()
+      val wallNs = System.nanoTime() - t0
       sc.setJobGroup(sentinelGroup, "eager-construction probe", false)
       try sc.parallelize(Seq(0), 1).count()
       finally sc.clearJobGroup()
@@ -71,16 +105,17 @@ object Bench {
       // plan time, a spurious cache silently mis-benches.
       val flushed =
         sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS)
-      (built, if (flushed) jobs.get() else -1)
+      (built, Work(if (flushed) jobs.get() else -1, wallNs, cpuNs.get(),
+        shuffleBytes.get(), shuffleRecs.get(), spill.get(),
+        taskMs.toArray(Array.empty[java.lang.Long]).toSeq.map(_.longValue)))
     } finally sc.removeSparkListener(listener)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+  /** The bench session: [[Graft.session]] plus the two runtime confs the
+    * bench measures under. Probe uses it too, so a probe figure and a
+    * bench figure come from the same configuration. */
+  def session(cpus: Int): SparkSession = {
+    val spark = Graft.session(threads = cpus,
       // With AQE off (below) nothing coalesces post-shuffle partitions,
       // and at this data size a 32-partition shuffle is mostly task
       // dispatch: measured totals 32p=11.6s, 8p=6.3s, 4p=6.1s (round 3);
@@ -91,30 +126,35 @@ object Bench {
       // passes absorbs the occasional straggler. (Real-scale sessions size
       // partitions to data or let AQE coalesce.) SPARK_GRAFT_SHUFFLE
       // overrides for A/B.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.get("SPARK_GRAFT_SHUFFLE")
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
-          .getOrElse(math.min(cpus.toInt, 4)))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 40 queries x ~5 codegen stages far exceeds the default 100-entry
-      // generated-class cache; eviction-driven recompiles cost seconds
-      // per query and dominate the bench without this.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Driver-side planning is ~2% of wall-clock per query here (40
-      // fresh plans per pass); constraint propagation is the single most
-      // expensive optimizer phase and only infers redundant IsNotNull
-      // predicates on this workload (A/B: 0.87s → 0.58s summed plan
-      // time). Results are unaffected — it's an optimization-only phase.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // At bench scale AQE has nothing to re-plan (known stats, no skew)
-      // and its per-stage materialization jobs cost ~40% of wall-clock;
-      // production sessions (Graft.session) keep AQE on — at real scale
-      // runtime re-planning earns its overhead.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+      shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE")
+        .flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
+        .getOrElse(math.min(cpus, 4)))
+    // Graft.session's codegen cache (5000 entries) matters here: 40
+    // queries x ~5 codegen stages far exceeds the default 100-entry
+    // generated-class cache, and eviction-driven recompiles cost seconds
+    // per query.
+    // Driver-side planning is ~2% of wall-clock per query here (40
+    // fresh plans per pass); constraint propagation is the single most
+    // expensive optimizer phase and only infers redundant IsNotNull
+    // predicates on this workload (A/B: 0.87s → 0.58s summed plan
+    // time). Results are unaffected — it's an optimization-only phase.
+    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    // At bench scale AQE has nothing to re-plan (known stats, no skew)
+    // and its per-stage materialization jobs cost ~40% of wall-clock;
+    // production sessions (Graft.session) keep AQE on — at real scale
+    // runtime re-planning earns its overhead.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** SPARK_GRAFT_CPUS, else every core of the host. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session(cpus)
     // Takes a thunk so a query that does eager work while its DataFrame
     // is constructed (q60's clustering loop) has that work timed too.
     // freeAfter: rebuild-per-pass queries leave one materialized block
@@ -157,22 +197,22 @@ object Bench {
       // per 40-query pass — ~10% of a quiet pass, and the first thing
       // external CPU pressure inflates). Execution still re-runs in
       // full per pass; only the plan is reused. EXCEPTION, detected
-      // structurally via jobsDuringBuild (not a hand list): a query that
+      // structurally via measure (not a hand list): a query that
       // launches Spark jobs while its DataFrame is CONSTRUCTED (q60's
       // checkpointed clustering loop) would have only its final assembly
       // timed if cached, so it is rebuilt inside every timed pass.
       val dfs: Seq[(String, () => org.apache.spark.sql.DataFrame, Boolean)] =
         queries.map { case (name, fn) =>
           val probed =
-            try Some(jobsDuringBuild(spark)(() => fn(spark, sfDir)))
+            try Some(measure(spark)(() => fn(spark, sfDir)))
             catch { case _: Throwable => None }
           probed match {
-            case Some((df, 0)) => (name, () => df, false)
-            case Some((df, n)) =>
-              System.err.println(if (n < 0)
+            case Some((df, work)) if work.jobs == 0 => (name, () => df, false)
+            case Some((df, work)) =>
+              System.err.println(if (work.jobs < 0)
                 s"[bench] $name: construction-probe sentinel not observed; rebuilding per pass to be safe"
               else
-                s"[bench] $name launched $n job(s) during construction; rebuilding per pass")
+                s"[bench] $name launched ${work.jobs} job(s) during construction; rebuilding per pass")
               // The probe's throwaway build may have materialized blocks
               // (q60's final labels) no one will ever read — free them.
               try graft.operators.Materialized.free(df)

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale smoke (VERDICT r5 #4): runs the heaviest pipelines against a
@@ -41,32 +38,20 @@ object ScaleSmoke {
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0))
       .getOrElse(10)
     val out = new java.io.File(sys.props("java.io.tmpdir"), s"graft-scale$copies").getPath
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      // Unlike the microbench session, the smoke keeps AQE on — this IS
-      // the production-shaped run the bench session's comments defer to.
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Keep the synthesized events µs-encoded (Spark's default INT96
-      // would flip the adaptive events reader onto a third encoding).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    // Unlike the microbench session, the smoke keeps AQE on — this IS
+    // the production-shaped run the bench session's comments defer to.
+    // Graft.session's µs output timestamps keep the synthesized events
+    // µs-encoded (Spark's default INT96 would flip the adaptive events
+    // reader onto a third encoding).
+    val spark = Graft.session(threads = Bench.cpus, shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
-
-    val shuffleWrite = new AtomicLong(0)
-    val spilled = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
+    // Every figure a SMOKE line prints comes from one Bench.measure
+    // window per timed step; `io` sums the shuffle write and spill of
+    // the windows a line covers.
+    def measure[T](body: => T): (T, Bench.Work) = Bench.measure(spark)(() => body)
+    def io(ws: Bench.Work*): String =
+      f"shuffleWriteMB=${ws.map(_.shuffleWriteBytes).sum / 1e6}%.1f " +
+        f"spillMB=${ws.map(_.spillBytes).sum / 1e6}%.1f"
 
     // ---- synthesize the 10× directory ----
     // SPARK_GRAFT_SMOKE_DOCS_ONLY=1 skips the fact/dim synthesis: the
@@ -145,41 +130,28 @@ object ScaleSmoke {
     // stages — a focused spill/sizing probe re-uses the generator
     // without paying the full stage list (data gen still runs).
     val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY").map(_.r)
+    // Every timed query runs its WHOLE plan through the noop sink, and
+    // the row count rides along as an observed metric. A count() may
+    // prune sorts, joins and columns: q38's count plan is six broadcast
+    // joins with its sort elided (295 shuffle bytes at 10× against
+    // 514 MB, 4 s against 31 s, for the declared query); q86's count
+    // eliminates its verdict join, which is provably unique on the key
+    // (the first cut timed a 0.36 s parquet count at 300×); and q73's
+    // count collapsed to a footer scan (its wall was flat 10×→100×).
+    def rowsOf(df: DataFrame): Long = {
+      val obs = org.apache.spark.sql.Observation()
+      df.observe(obs, count(lit(1)).as("rows"))
+        .write.format("noop").mode("overwrite").save()
+      obs.get("rows").asInstanceOf[Long]
+    }
     def run(name: String)(df: => DataFrame): Unit = {
       if (only.exists(_.findFirstIn(name).isEmpty)) {
         println(s"SMOKE $name SKIPPED (SPARK_GRAFT_SMOKE_ONLY)")
         return
       }
-      df.count()
-      shuffleWrite.set(0); spilled.set(0)
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously; give them a beat
-      Thread.sleep(300)
-      println(f"SMOKE $name%-22s rows=$rows%-9d sec=$sec%.2f " +
-        f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
-    }
-    // run() times df.count(), and a count PRUNES whatever it doesn't
-    // need: narrow per-row projections collapse to a footer-count scan
-    // and unreferenced aggregate expressions (q74's collect_list
-    // rebuild) are dropped — the first q73/q74 smoke cut measured the
-    // count machinery, not the operator (caught because q73's wall was
-    // flat 10×→100×, physically impossible for real work). Force every
-    // output column through a hash the count depends on.
-    def hashed(df: DataFrame): DataFrame = {
-      // A per-row FILTER on the hash, not an aggregate-then-rebuild:
-      // the masked hash is >= 0 at runtime but Catalyst cannot prove it
-      // (xxhash64 isn't foldable and no rule reasons about bitmask
-      // ranges), so the predicate survives optimization and count()
-      // must evaluate the hash — and with it every output column — for
-      // each row. rows = the TRUE count with zero materialization.
-      // (The first cut aggregated a hash sum and rebuilt the count via
-      // explode(array_repeat(1, n)): one n-element array on one row,
-      // int cast silently wrapping past 2^31 — a larger decade would
-      // OOM or report a wrong count.)
-      val h = xxhash64(df.columns.map(col): _*).bitwiseAND(lit(0x7FFFFFFFL))
-      df.select(h.as("h")).filter(col("h") >= 0L).select(lit(1).as("one"))
+      rowsOf(df)
+      val (rows, w) = measure(rowsOf(df))
+      println(f"SMOKE $name%-22s rows=$rows%-9d sec=${w.sec}%.2f ${io(w)}")
     }
     run("q38_star_denorm") { SparkEntry.queries("q38_star_denorm")(spark, out) }
     // Round 11 (VERDICT r10 #6): the ONE recorded smoke spill is q38's
@@ -218,7 +190,7 @@ object ScaleSmoke {
       // sorters outgrowing their memory share on 128 MB scan chunks of
       // the wide fact. Small scan partitions size the map side the way
       // the advisory sizes the reduce side; with all three set the
-      // 300× run is spill-free (spill_attrib stage, COVERAGE round 13).
+      // 300× run is spill-free (COVERAGE round 13).
       spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       run("q38_sized_advisory") { SparkEntry.queries("q38_star_denorm")(spark, out) }
     } finally {
@@ -245,20 +217,15 @@ object ScaleSmoke {
     //    index-side signature build — the part a production deployment
     //    precomputes ONCE through the md5SetsAndBands seam and
     //    amortizes over every batch.
-    // Counted through hashed(): a bare count() of this query measures
-    // NOTHING — its tail is a left join against an aggregate that is
-    // provably unique on the join key, and when only the row count is
-    // needed Catalyst ELIMINATES the join (correct optimizer behavior,
-    // wrong probe: the first cut timed a 0.36 s parquet count at 300×).
     run("q86_incremental") {
-      hashed(SparkEntry.queries("q86_incremental_dedup")(spark, out))
+      SparkEntry.queries("q86_incremental_dedup")(spark, out)
     }
     run("q86_small_increment") {
       val docs = spark.read.parquet(s"$out/documents.parquet")
         .select("doc_id", "text")
       val isInc = pmod(col("doc_id"), lit(100)) === 0
-      hashed(graft.operators.Approx.incrementalDedup(spark,
-        docs.filter(!isInc), docs.filter(isInc)))
+      graft.operators.Approx.incrementalDedup(spark,
+        docs.filter(!isInc), docs.filter(isInc))
     }
     // The index signature chain ALONE (99% of the corpus): the part of
     // q86_small_increment's wall a production deployment computes once
@@ -270,7 +237,7 @@ object ScaleSmoke {
         .select("doc_id", "text")
       val (_, bands) = graft.operators.Approx.md5SetsAndBands(spark,
         docs.filter(pmod(col("doc_id"), lit(100)) =!= 0))
-      hashed(bands)
+      bands
     }
     // The stored-index batch itself: index built and WRITTEN once
     // (outside the timer — that is the amortized part), then the timed
@@ -285,11 +252,11 @@ object ScaleSmoke {
       idx.sets.write.mode("overwrite").parquet(s"$out/mhidx/sets")
       idx.bands.write.mode("overwrite").parquet(s"$out/mhidx/bands")
       run("q86_stored_batch") {
-        hashed(graft.operators.Approx.incrementalDedup(spark,
+        graft.operators.Approx.incrementalDedup(spark,
           graft.operators.Approx.MinHashIndex(
             spark.read.parquet(s"$out/mhidx/sets"),
             spark.read.parquet(s"$out/mhidx/bands")),
-          docs.filter(isInc)))
+          docs.filter(isInc))
       }
     }
     // Incremental SEMANTIC dedup (round 13): the embedding-space twin
@@ -318,12 +285,12 @@ object ScaleSmoke {
       graft.operators.Approx.semanticCentroidsDF(spark, cents)
         .write.mode("overwrite").parquet(s"$out/semidx/centroids")
       run("q88_stored_batch") {
-        hashed(graft.operators.Approx.incrementalSemanticDedup(
+        graft.operators.Approx.incrementalSemanticDedup(
           graft.operators.Approx.SemanticIndex(
             spark.read.parquet(s"$out/semidx/vectors"),
             graft.operators.Approx.semanticCentroidsFromDF(
               spark.read.parquet(s"$out/semidx/centroids"))),
-          embAll.filter(isInc), minSim = 0.98))
+          embAll.filter(isInc), minSim = 0.98)
       }
     }
     // The rest of the near-dup family (round 9): the ML-LSH variant and
@@ -351,7 +318,9 @@ object ScaleSmoke {
     // loop leaked superlinear work the later days would climb; the
     // expected shape is FLAT (the index scan dominates and the folded
     // state is ≤ the 1% increment in total).
-    if (enabled("advance_days")) {
+    // Gated by the names of the rows it prints, so 'q86_advance' selects
+    // it as well as 'advance_days'.
+    if (enabled("q86_advance_days") || enabled("q88_advance_days")) {
       val docs = spark.read.parquet(s"$out/documents.parquet")
         .select("doc_id", "text")
       val isInc = pmod(col("doc_id"), lit(100)) === 0
@@ -365,14 +334,9 @@ object ScaleSmoke {
       val stateDir = s"$out/mhadv_state_${System.nanoTime()}"
       (0 until 5).foreach { k =>
         val dayDf = docs.filter(isInc && dayOf === k).localCheckpoint(true)
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        val n = hashed(graft.streaming.StreamingIncrementalDedup
-          .foldAndScreen(spark, stored, stateDir, dayDf, k.toLong)).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        println(f"SMOKE q86_advance_day$k%-9s rows=$n%-9d sec=$sec%.2f " +
-          f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+        val (n, w) = measure(rowsOf(graft.streaming.StreamingIncrementalDedup
+          .foldAndScreen(spark, stored, stateDir, dayDf, k.toLong)))
+        println(f"SMOKE q86_advance_day$k%-9s rows=$n%-9d sec=${w.sec}%.2f ${io(w)}")
       }
       // Semantic twin of the same loop, same day split, same stateDir
       // discipline (fit + index write outside the timers).
@@ -391,14 +355,9 @@ object ScaleSmoke {
       val semState = s"$out/semadv_state_${System.nanoTime()}"
       (0 until 5).foreach { k =>
         val dayDf = embAll.filter(isIncV && dayOfV === k).localCheckpoint(true)
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        val n = hashed(graft.streaming.StreamingIncrementalSemantic
-          .foldAndScreen(spark, semStored, semState, dayDf, k.toLong, 0.98)).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        println(f"SMOKE q88_advance_day$k%-9s rows=$n%-9d sec=$sec%.2f " +
-          f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+        val (n, w) = measure(rowsOf(graft.streaming.StreamingIncrementalSemantic
+          .foldAndScreen(spark, semStored, semState, dayDf, k.toLong, 0.98)))
+        println(f"SMOKE q88_advance_day$k%-9s rows=$n%-9d sec=${w.sec}%.2f ${io(w)}")
       }
     }
 
@@ -423,19 +382,12 @@ object ScaleSmoke {
       (0 until 5).foreach { k =>
         val stored = graft.operators.SubstringDedup.readWindowIndex(spark, wdir)
         val dayDf = docs.filter(isInc && dayOf === k).localCheckpoint(true)
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        val n = hashed(graft.operators.SubstringDedup
-          .incrementalWindowStats(stored, dayDf, k = 8)).count()
-        val screenSec = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        graft.operators.SubstringDedup
-          .appendWindowIndexDay(dayDf, k = 8, wdir, batchId = k.toLong)
-        val foldSec = (System.nanoTime() - t1) / 1e9
-        Thread.sleep(300)
-        println(f"SMOKE q92_advance_day$k%-9s rows=$n%-9d sec=$screenSec%.2f " +
-          f"foldSec=$foldSec%.2f shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f " +
-          f"spillMB=${spilled.get / 1e6}%.1f")
+        val (n, wScreen) = measure(rowsOf(graft.operators.SubstringDedup
+          .incrementalWindowStats(stored, dayDf, k = 8)))
+        val (_, wFold) = measure(graft.operators.SubstringDedup
+          .appendWindowIndexDay(dayDf, k = 8, wdir, batchId = k.toLong))
+        println(f"SMOKE q92_advance_day$k%-9s rows=$n%-9d sec=${wScreen.sec}%.2f " +
+          f"foldSec=${wFold.sec}%.2f ${io(wScreen, wFold)}")
       }
       locally {
         // Round 16 (VERDICT r15 #3): the compaction runs through the
@@ -449,14 +401,9 @@ object ScaleSmoke {
           hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(hp, true)
         }
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        graft.operators.SubstringDedup.compactWindowIndexStore(
-          spark, wdir, s"$out/widx_compacted")
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"SMOKE q92_compact_sized sec=$sec%.2f " +
-          f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f " +
-          f"spillMB=${spilled.get / 1e6}%.1f")
+        val (_, w) = measure(graft.operators.SubstringDedup.compactWindowIndexStore(
+          spark, wdir, s"$out/widx_compacted"))
+        println(f"SMOKE q92_compact_sized sec=${w.sec}%.2f ${io(w)}")
       }
     }
 
@@ -493,10 +440,10 @@ object ScaleSmoke {
         val frac = math.min(1.0, 50000.0 / n)
         Seq(false, true).foreach { tree =>
           run(f"sem_xover_${n}_${if (tree) "tree" else "flat"}") {
-            hashed(graft.operators.Approx.semanticDedup(
+            graft.operators.Approx.semanticDedup(
               vecs.select(col("vec_id"), col("embedding")),
               minSim = 0.98, nlist = nlist, fitFraction = frac,
-              treeAssign = tree))
+              treeAssign = tree)
           }
         }
         // Decomposition: the ASSIGN stage alone, both implementations,
@@ -513,19 +460,19 @@ object ScaleSmoke {
           val cents = graft.operators.Approx.fitSemanticCentroids(
             vecs, nlist = nlist, fitFraction = frac)
           run(f"sem_assign_${n}_flat") {
-            hashed(graft.operators.Approx.buildSemanticIndex(
+            graft.operators.Approx.buildSemanticIndex(
               vecs.select(col("vec_id"), col("embedding")), cents)
-              .vectors.select(col("vec_id"), col("cell"), col("nrm")))
+              .vectors.select(col("vec_id"), col("cell"), col("nrm"))
           }
           val k = math.max(1, math.round(math.sqrt(cents.length.toDouble)).toInt)
           val centsArr = cents.map(_.toArray).toArray
           val topOf = graft.expressions.IvfTreeAssign.groupCentroids(centsArr, k)
           run(f"sem_assign_${n}_tree") {
             graft.expressions.GraftFunctions.register(spark)
-            hashed(vecs.select(col("vec_id"),
+            vecs.select(col("vec_id"),
               call_function("ivf_tree_assign", col("embedding"),
                 typedLit(centsArr.map(_.toSeq).toSeq), typedLit(topOf.toSeq),
-                lit(2)).as("cell")))
+                lit(2)).as("cell"))
           }
         }
       }
@@ -629,12 +576,11 @@ object ScaleSmoke {
     if (lastSmoked != null) { graft.operators.Materialized.free(lastSmoked); lastSmoked = null }
     // Shuffle-shard (round 11, pipeline stage 7): the global rank is
     // the same two-phase form as packing, over (id, md5) pairs — wall
-    // near-flat, rows = ids, all exchanges narrow. hashed(): shard/pos
-    // come from the rank window, which a bare count would prune away.
+    // near-flat, rows = ids, all exchanges narrow.
     run("shuffle_shards") {
-      hashed(tracked(graft.operators.Sharding.shuffleShards(
+      tracked(graft.operators.Sharding.shuffleShards(
         spark.read.parquet(s"$out/documents.parquet").select("doc_id"),
-        nShards = 64, idCol = "doc_id")))
+        nShards = 64, idCol = "doc_id"))
     }
     if (lastSmoked != null) { graft.operators.Materialized.free(lastSmoked); lastSmoked = null }
     // Epoch-repeat mixture (round 11): budget = 3.5× the corpus mass at
@@ -647,15 +593,15 @@ object ScaleSmoke {
       md5(concat_ws(":", lit("mix"), col("doc_id").cast("string"))).as("rk"))
     lazy val epMass = sizedEp.agg(sum(col("n_tokens"))).head().getLong(0)
     run("epoch_mixture_3p5x") {
-      hashed(tracked(graft.operators.Sampling.quotaSampleEpochs(sizedEp,
-        Map("en" -> (3L * epMass + epMass / 2)))))
+      tracked(graft.operators.Sampling.quotaSampleEpochs(sizedEp,
+        Map("en" -> (3L * epMass + epMass / 2))))
     }
     if (lastSmoked != null) { graft.operators.Materialized.free(lastSmoked); lastSmoked = null }
     // Repetition signals (round 11): shuffle-free by construction (the
     // plan pin proves no exchange but the orderBy); wall = the per-doc
     // tokenize + sort-fold passes, linear in corpus bytes.
     run("q73_repetition") {
-      hashed(SparkEntry.queries("q73_repetition_stats")(spark, out))
+      SparkEntry.queries("q73_repetition_stats")(spark, out)
     }
     // Boilerplate scrub (round 11): the one exchange that carries TEXT
     // (the doc_id rebuild — inherent to a corpus-statistic rewrite).
@@ -663,7 +609,7 @@ object ScaleSmoke {
     // structs, linear in `copies`; the df-ranking side is
     // vocabulary-sized and must stay invisible here.
     run("q74_boilerplate") {
-      hashed(SparkEntry.queries("q74_boilerplate_scrub")(spark, out))
+      SparkEntry.queries("q74_boilerplate_scrub")(spark, out)
     }
     // Packed payload (round 11): tokenize → slice map → materialized
     // training rows. The payload crosses AT MOST the doc-keyed join
@@ -679,10 +625,10 @@ object ScaleSmoke {
     // join (broadcast while the shadowed-starts side is small). The
     // planted families make the shadowed mass linear in `copies`.
     run("q76_window_stats") {
-      hashed(SparkEntry.queries("q76_window_stats")(spark, out))
+      SparkEntry.queries("q76_window_stats")(spark, out)
     }
     run("q77_window_scrub") {
-      hashed(SparkEntry.queries("q77_window_scrub")(spark, out))
+      SparkEntry.queries("q77_window_scrub")(spark, out)
     }
     // q76's spill decomposes into TWO sorts with DIFFERENT dials
     // (measured at 300×, the round's only remaining multi-GB spill):
@@ -703,11 +649,11 @@ object ScaleSmoke {
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
       spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 512)
       run("q76_sized_advisory") {
-        hashed(SparkEntry.queries("q76_window_stats")(spark, out))
+        SparkEntry.queries("q76_window_stats")(spark, out)
       }
       spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
       run("q76_sized_both") {
-        hashed(SparkEntry.queries("q76_window_stats")(spark, out))
+        SparkEntry.queries("q76_window_stats")(spark, out)
       }
     } finally {
       def restore(key: String, prior: Option[String]): Unit = prior match {
@@ -743,14 +689,14 @@ object ScaleSmoke {
         spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 512)
         spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
         run("q77_sized") {
-          hashed(SparkEntry.queries("q77_window_scrub")(spark, out))
+          SparkEntry.queries("q77_window_scrub")(spark, out)
         }
         spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
         run("q77_sized_shj") {
-          hashed(SparkEntry.queries("q77_window_scrub")(spark, out))
+          SparkEntry.queries("q77_window_scrub")(spark, out)
         }
         run("q76_sized_shj") {
-          hashed(SparkEntry.queries("q76_window_stats")(spark, out))
+          SparkEntry.queries("q76_window_stats")(spark, out)
         }
       } finally {
         def restore(key: String, prior: Option[String]): Unit = prior match {
@@ -761,100 +707,6 @@ object ScaleSmoke {
         restore("spark.sql.adaptive.coalescePartitions.initialPartitionNum", pInit)
         restore("spark.sql.files.maxPartitionBytes", pScan)
         restore("spark.sql.join.preferSortMergeJoin", pSmj)
-      }
-    }
-    // Round 13 (VERDICT r12 #3a): the q38 dedicated-probe (spill 0)
-    // vs in-smoke (~2.4 GB) discrepancy under identical sizing. The
-    // suspected variable is PASS STRUCTURE, not sizing: re-counting
-    // the SAME DataFrame re-submits its jobs but the shuffle map
-    // outputs are still registered with the shuffle manager, so warm
-    // passes skip the map stages — and a probe reporting
-    // min-of-warm-passes then reports a run whose heavy sort never
-    // re-ran. This probe separates the conditions: per-PASS spill for
-    // a reused-plan DataFrame (pass 1 cold, 2-3 warm) vs a rebuilt
-    // DataFrame per pass (every pass cold), both under the sized
-    // confs, in whatever session state the smoke has accumulated.
-    if (enabled("q38_probe")) {
-      val pAdv = spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      val pInit = spark.conf.getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-      try {
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 512)
-        def pass(arm: String, p: Int, df: DataFrame): Unit = {
-          shuffleWrite.set(0); spilled.set(0)
-          val t0 = System.nanoTime()
-          val rows = df.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300)
-          println(f"SMOKEPROBE q38 arm=$arm%-7s pass=$p rows=$rows%-9d sec=$sec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
-        }
-        val reused = SparkEntry.queries("q38_star_denorm")(spark, out)
-        for (p <- 1 to 3) pass("reused", p, reused)
-        for (p <- 1 to 3) pass("fresh", p, SparkEntry.queries("q38_star_denorm")(spark, out))
-      } finally {
-        def restore(key: String, prior: Option[String]): Unit = prior match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-        restore("spark.sql.adaptive.advisoryPartitionSizeInBytes", pAdv)
-        restore("spark.sql.adaptive.coalescePartitions.initialPartitionNum", pInit)
-      }
-    }
-    // Round 13 (VERDICT r12 #3): NAME the residual spill. The listener
-    // totals (diskBytesSpilled) say HOW MUCH spilled; this probe says
-    // WHERE — after executing the query once under the sized dials it
-    // walks the finalized adaptive plan (descending into materialized
-    // query stages, which are leaves to TreeNode.collect) and prints
-    // every physical node whose own `spillSize` SQL metric is nonzero.
-    // The gap between the listener total and the plan-node sum is
-    // shuffle-WRITE-side spill (ExternalSorter/UnsafeShuffleWriter
-    // inside the exchange), which no plan node owns — so the one
-    // print separates operator sorts/hash-agg fallbacks from exchange
-    // machinery in a single run.
-    if (enabled("spill_attrib")) {
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      val pAdv = spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      val pInit = spark.conf.getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-      val pScan = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-      try {
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 512)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
-        def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-          case q: QueryStageExec => walk(q.plan)
-          case other => other.children.flatMap(walk)
-        })
-        def attrib(tag: String, df: DataFrame): Unit = {
-          shuffleWrite.set(0); spilled.set(0)
-          // Execute through hashed() — the same anti-pruning wrapper the
-          // smoke's timed runs use — so the probe attributes the exact
-          // plan whose spill the smoke measured (a bare count() lets
-          // Catalyst prune every column and eliminate sorts, and the
-          // first cut of this probe measured that nothing: 0 spill).
-          val agg = hashed(df).groupBy().count()
-          agg.head()
-          Thread.sleep(300)
-          val nodes = walk(agg.queryExecution.executedPlan)
-          val spills = nodes.flatMap { n =>
-            n.metrics.get("spillSize").map(m => (n.nodeName, m.value)).filter(_._2 > 0)
-          }
-          println(f"SMOKEATTRIB $tag listenerSpillMB=${spilled.get / 1e6}%.1f " +
-            s"nodeSpills=[${spills.map { case (n, v) => s"$n=${(v / 1e6).round}MB" }.mkString(", ")}]")
-        }
-        attrib("q38", SparkEntry.queries("q38_star_denorm")(spark, out))
-        attrib("q76", SparkEntry.queries("q76_window_stats")(spark, out))
-        attrib("q77", SparkEntry.queries("q77_window_scrub")(spark, out))
-      } finally {
-        def restore(key: String, prior: Option[String]): Unit = prior match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-        restore("spark.sql.adaptive.advisoryPartitionSizeInBytes", pAdv)
-        restore("spark.sql.adaptive.coalescePartitions.initialPartitionNum", pInit)
-        restore("spark.sql.files.maxPartitionBytes", pScan)
       }
     }
     // Round 13 (VERDICT r12 #4): q81's WindowGroupLimit under REAL
@@ -872,16 +724,6 @@ object ScaleSmoke {
     //    pass — the hot source's reduce task reads maps × k rows, so
     //    no straggler task proportional to the hot mass can appear.
     if (enabled("q81_hot")) {
-      val taskDurs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-      val shufRecs = new AtomicLong(0)
-      val probeListener = new SparkListener {
-        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shufRecs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskInfo != null) taskDurs.add(te.taskInfo.duration)
-      }
       val hotDocs = spark.range(nDocs).select(
         col("id").as("doc_id"),
         when(pmod(col("id"), lit(10)) < 9, lit("hot"))
@@ -894,22 +736,14 @@ object ScaleSmoke {
         .withColumn("src_rank", row_number().over(w).cast("long"))
         .filter(col("src_rank") <= graft.ops.Extended.Q81CapPerSource)
         .select(col("doc_id"), col("source"), col("src_rank"))
-      capDf.count() // warm (plan + codegen)
-      spark.sparkContext.addSparkListener(probeListener)
-      try {
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        val rows = capDf.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500)
-        val durs = taskDurs.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted
-        val maxD = if (durs.nonEmpty) durs.last else 0L
-        val medD = if (durs.nonEmpty) durs(durs.length / 2) else 0L
-        println(f"SMOKE q81_hot_skew rows=$rows%-6d sec=$sec%.2f " +
-          f"corpus=$nDocs hotShare=0.9 shuffleRecords=${shufRecs.get} " +
-          f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f " +
-          f"tasks=${durs.length} taskMsMax=$maxD taskMsMedian=$medD")
-      } finally spark.sparkContext.removeSparkListener(probeListener)
+      rowsOf(capDf) // warm (plan + codegen)
+      val (rows, work) = measure(rowsOf(capDf))
+      val durs = work.taskMs.sorted
+      val maxD = durs.lastOption.getOrElse(0L)
+      val medD = if (durs.nonEmpty) durs(durs.length / 2) else 0L
+      println(f"SMOKE q81_hot_skew rows=$rows%-6d sec=${work.sec}%.2f " +
+        f"corpus=$nDocs hotShare=0.9 shuffleRecords=${work.shuffleRecords} ${io(work)} " +
+        f"tasks=${durs.length} taskMsMax=$maxD taskMsMedian=$medD")
     }
     // End-to-end training pipeline (round 10): quality → exact dedup →
     // mass-routed near-dup → decontam (fixed 500-doc benchmark slice)
@@ -966,26 +800,6 @@ object ScaleSmoke {
       lastSelected = ts.selected
       ts.selected
     }
-    // Unsized control for the substring-staged build (round 15): stage
-    // 3b now runs under STAGE-SCOPED sizing by default (VERDICT r14
-    // #3 — the r14 session-wide dials cut the 3.6 GB spill 72% but
-    // cost +10% wall by re-sizing every other stage; buildTrainingSet
-    // scopes them to the stage's own materialization). training_substr
-    // above therefore measures the production default; this arm turns
-    // the scoping OFF to attribute the difference.
-    run("training_substr_unsized") {
-      if (lastSelected != null) graft.operators.Materialized.free(lastSelected)
-      val docsAll = spark.read.parquet(s"$out/documents.parquet")
-        .select("doc_id", "text", "lang")
-      val bench = docsAll.filter(col("doc_id") < 500).select("text")
-      val ts = graft.operators.TrainingData.buildTrainingSet(spark, docsAll, bench,
-        budgets = Map("en" -> 100000L * copies), seqLen = 2048,
-        minQuality = 0.0, maxRepetition = 1.0, minTokens = 1,
-        substrK = Some(8), substrStageSizing = false)
-      graft.operators.Materialized.free(ts.packed)
-      lastSelected = ts.selected
-      ts.selected
-    }
     if (lastSelected != null) { graft.operators.Materialized.free(lastSelected); lastSelected = null }
     // ---- the composed incremental pipeline, per-day (round 15,
     // VERDICT r14 #1's smoke) ----
@@ -1025,32 +839,27 @@ object ScaleSmoke {
           minQuality = 0.0, maxRepetition = 1.0, minTokens = 1,
           dayEmbeddings = Some(embAll), benchmarkEmbeddings = Some(benchEmb),
           minCosine = 0.9, substrK = Some(8), arrivalOrder = arrival)
+      // One measured day: the state (loaded inside the window when `st`
+      // reads the store), the advance and its admitted count.
+      def timedDay(st: => graft.operators.TrainingData.PipelineState, d: DataFrame,
+                   arrival: Boolean = false) =
+        measure { val o = day(st, d, arrival); (o, o.admitted.count()) }
       // ---- arrival-order cost parity (round 16, VERDICT r15 #7): the
       // mode is the same joins with a different literal predicate, so
       // its day cost must be within noise of id mode. ----
       if (enabled("pipeline_arrival")) locally {
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        val seeded = day(graft.operators.TrainingData.initPipelineState(spark,
+        val ((seeded, n), w0) = timedDay(graft.operators.TrainingData.initPipelineState(spark,
           substrK = Some(8), semCentroids = Some(cents)),
           docsAll.filter(!isInc), arrival = true)
-        val n = seeded.admitted.count()
-        println(f"SMOKE pipearr_seed      rows=$n%-9d sec=${(System.nanoTime() - t0) / 1e9}%.2f " +
-          f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+        println(f"SMOKE pipearr_seed      rows=$n%-9d sec=${w0.sec}%.2f ${io(w0)}")
         graft.operators.Materialized.free(seeded.admitted)
         var st = seeded.state
         (0 until 5).foreach { k =>
           val dayDf = docsAll.filter(isInc && dayOf === k).localCheckpoint(true)
-          shuffleWrite.set(0); spilled.set(0)
-          val t2 = System.nanoTime()
-          val out2 = day(st, dayDf, arrival = true)
-          val rows = out2.admitted.count()
-          val daySec = (System.nanoTime() - t2) / 1e9
+          val ((out2, rows), w) = timedDay(st, dayDf, arrival = true)
           st = out2.state
           graft.operators.Materialized.free(out2.admitted)
-          Thread.sleep(300)
-          println(f"SMOKE pipearr_day$k%-11s rows=$rows%-7d sec=$daySec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          println(f"SMOKE pipearr_day$k%-11s rows=$rows%-7d sec=${w.sec}%.2f ${io(w)}")
         }
       }
       // ---- per-day durable state (round 16, VERDICT r15 #2): the
@@ -1072,35 +881,23 @@ object ScaleSmoke {
         }
         graft.operators.TrainingData.initDurablePipelineState(spark, dDir,
           substrK = Some(8), semCentroids = Some(cents))
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        val seeded = day(graft.operators.TrainingData
+        val ((seeded, n), w0) = timedDay(graft.operators.TrainingData
           .loadDurablePipelineState(spark, dDir), docsAll.filter(!isInc))
-        val n = seeded.admitted.count()
-        println(f"SMOKE pipedur_seed      rows=$n%-9d sec=${(System.nanoTime() - t0) / 1e9}%.2f " +
-          f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+        println(f"SMOKE pipedur_seed      rows=$n%-9d sec=${w0.sec}%.2f ${io(w0)}")
         graft.operators.Materialized.free(seeded.admitted)
-        val t1 = System.nanoTime()
-        graft.operators.TrainingData.appendPipelineDay(spark, dDir, 0L, seeded.folds)
-        println(f"SMOKE pipedur_seedsave  sec=${(System.nanoTime() - t1) / 1e9}%.2f")
+        val (_, wSave) = measure(
+          graft.operators.TrainingData.appendPipelineDay(spark, dDir, 0L, seeded.folds))
+        println(f"SMOKE pipedur_seedsave  sec=${wSave.sec}%.2f")
         (1 to 5).foreach { k =>
           val dayDf = docsAll.filter(isInc && dayOf === (k - 1)).localCheckpoint(true)
-          shuffleWrite.set(0); spilled.set(0)
-          val tL = System.nanoTime()
-          val st = graft.operators.TrainingData.loadDurablePipelineState(spark, dDir)
-          val loadSec = (System.nanoTime() - tL) / 1e9
-          val t2 = System.nanoTime()
-          val out2 = day(st, dayDf)
-          val rows = out2.admitted.count()
-          val daySec = (System.nanoTime() - t2) / 1e9
-          val t3 = System.nanoTime()
-          graft.operators.TrainingData.appendPipelineDay(spark, dDir, k.toLong, out2.folds)
-          val saveSec = (System.nanoTime() - t3) / 1e9
+          val (st, wLoad) = measure(
+            graft.operators.TrainingData.loadDurablePipelineState(spark, dDir))
+          val ((out2, rows), wDay) = timedDay(st, dayDf)
+          val (_, wSave) = measure(
+            graft.operators.TrainingData.appendPipelineDay(spark, dDir, k.toLong, out2.folds))
           graft.operators.Materialized.free(out2.admitted)
-          Thread.sleep(300)
-          println(f"SMOKE pipedur_day${k - 1}%-11s rows=$rows%-7d sec=$daySec%.2f " +
-            f"loadSec=$loadSec%.2f saveSec=$saveSec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          println(f"SMOKE pipedur_day${k - 1}%-11s rows=$rows%-7d sec=${wDay.sec}%.2f " +
+            f"loadSec=${wLoad.sec}%.2f saveSec=${wSave.sec}%.2f ${io(wLoad, wDay, wSave)}")
         }
         // Generation roll (round 16): the periodic O(state)
         // consolidation of the six folded day partitions into one, then
@@ -1108,23 +905,15 @@ object ScaleSmoke {
         // (fewer partitions, window rows pre-merged), and the screen
         // keeps working (re-feeding day 5 admits nothing).
         locally {
-          shuffleWrite.set(0); spilled.set(0)
-          val t0 = System.nanoTime()
-          graft.operators.TrainingData.compactPipelineState(
-            spark, dDir, s"$out/pipeline_dstate_c", asOfBatch = 5L)
-          val compactSec = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val st = graft.operators.TrainingData.loadDurablePipelineState(
-            spark, s"$out/pipeline_dstate_c")
-          val loadSec = (System.nanoTime() - t1) / 1e9
-          val t2 = System.nanoTime()
-          val refeed = day(st, docsAll.filter(isInc && dayOf === 4).localCheckpoint(true))
-          val rows = refeed.admitted.count()
-          val daySec = (System.nanoTime() - t2) / 1e9
+          val (_, wCompact) = measure(graft.operators.TrainingData.compactPipelineState(
+            spark, dDir, s"$out/pipeline_dstate_c", asOfBatch = 5L))
+          val (st, wLoad) = measure(graft.operators.TrainingData.loadDurablePipelineState(
+            spark, s"$out/pipeline_dstate_c"))
+          val ((refeed, rows), wDay) =
+            timedDay(st, docsAll.filter(isInc && dayOf === 4).localCheckpoint(true))
           graft.operators.Materialized.free(refeed.admitted)
-          println(f"SMOKE pipedur_compact   rows=$rows%-7d sec=$compactSec%.2f " +
-            f"loadSec=$loadSec%.2f refeedSec=$daySec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          println(f"SMOKE pipedur_compact   rows=$rows%-7d sec=${wCompact.sec}%.2f " +
+            f"loadSec=${wLoad.sec}%.2f refeedSec=${wDay.sec}%.2f ${io(wCompact, wLoad, wDay)}")
         }
         // Per-day ingest-health cost (round 17, VERDICT r16 #4): the
         // q94/q89 monitors off the loaded store — one band aggregate
@@ -1133,11 +922,8 @@ object ScaleSmoke {
         // reported day; this row prices it in isolation.
         locally {
           val st = graft.operators.TrainingData.loadDurablePipelineState(spark, dDir)
-          shuffleWrite.set(0); spilled.set(0)
-          val t0 = System.nanoTime()
-          val n = graft.operators.TrainingData.ingestHealth(st).collect().length
-          println(f"SMOKE pipedur_health    rows=$n%-7d sec=${(System.nanoTime() - t0) / 1e9}%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          val (n, w) = measure(graft.operators.TrainingData.ingestHealth(st).collect().length)
+          println(f"SMOKE pipedur_health    rows=$n%-7d sec=${w.sec}%.2f ${io(w)}")
         }
       }
       // ---- composed STREAMING shell at scale (round 17, VERDICT r16
@@ -1160,13 +946,14 @@ object ScaleSmoke {
         }
         graft.operators.TrainingData.initDurablePipelineState(spark, dDir,
           substrK = Some(8), semCentroids = Some(cents))
-        val t0 = System.nanoTime()
-        val seeded = day(graft.operators.TrainingData
-          .loadDurablePipelineState(spark, dDir), docsAll.filter(!isInc))
-        val n = seeded.admitted.count()
-        graft.operators.TrainingData.appendPipelineDay(spark, dDir, -1L,
-          seeded.folds)
-        println(f"SMOKE pipestream_seed   rows=$n%-9d sec=${(System.nanoTime() - t0) / 1e9}%.2f")
+        val ((seeded, n), w0) = measure {
+          val s = day(graft.operators.TrainingData
+            .loadDurablePipelineState(spark, dDir), docsAll.filter(!isInc))
+          val n = s.admitted.count()
+          graft.operators.TrainingData.appendPipelineDay(spark, dDir, -1L, s.folds)
+          (s, n)
+        }
+        println(f"SMOKE pipestream_seed   rows=$n%-9d sec=${w0.sec}%.2f")
         graft.operators.Materialized.free(seeded.admitted)
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -1185,14 +972,14 @@ object ScaleSmoke {
         (0 until 5).foreach { k =>
           val rows = docsAll.filter(isInc && dayOf === k)
             .as[(Long, String, String)].collect()
-          shuffleWrite.set(0); spilled.set(0)
-          val t1 = System.nanoTime()
-          stream.addData(rows.toIndexedSeq)
-          q.processAllAvailable()
-          val sec = (System.nanoTime() - t1) / 1e9
-          Thread.sleep(300)
-          println(f"SMOKE pipestream_day$k%-8s rows=${admRows.getOrElse(k.toLong, -1L)}%-7d sec=$sec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          // The microbatch's jobs run on the stream thread; they finish
+          // before processAllAvailable returns, so the window holds them.
+          val (_, w) = measure {
+            stream.addData(rows.toIndexedSeq)
+            q.processAllAvailable()
+          }
+          println(f"SMOKE pipestream_day$k%-8s rows=${admRows.getOrElse(k.toLong, -1L)}%-7d " +
+            f"sec=${w.sec}%.2f ${io(w)}")
         }
         q.stop()
         val healthRows = spark.read.parquet(s"$dDir/health")
@@ -1225,35 +1012,22 @@ object ScaleSmoke {
           val hi = nDocs.toDouble * (c + 1) / nChunks
           val chunk = docsAll.filter(!isInc &&
             col("doc_id") >= lo && col("doc_id") < hi).localCheckpoint(true)
-          shuffleWrite.set(0); spilled.set(0)
-          val t0 = System.nanoTime()
-          val st = graft.operators.TrainingData.loadDurablePipelineState(spark, dDir)
-          val out2 = day(st, chunk)
-          val rows = out2.admitted.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          graft.operators.TrainingData.appendPipelineDay(spark, dDir, c.toLong, out2.folds)
-          val saveSec = (System.nanoTime() - t1) / 1e9
+          val ((out2, rows), w) = timedDay(
+            graft.operators.TrainingData.loadDurablePipelineState(spark, dDir), chunk)
+          val (_, wSave) = measure(
+            graft.operators.TrainingData.appendPipelineDay(spark, dDir, c.toLong, out2.folds))
           graft.operators.Materialized.free(out2.admitted)
-          Thread.sleep(300)
-          println(f"SMOKE pipebf_chunk$c%-9s rows=$rows%-9d sec=$sec%.2f " +
-            f"saveSec=$saveSec%.2f shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f " +
-            f"spillMB=${spilled.get / 1e6}%.1f")
+          println(f"SMOKE pipebf_chunk$c%-9s rows=$rows%-9d sec=${w.sec}%.2f " +
+            f"saveSec=${wSave.sec}%.2f ${io(w, wSave)}")
         }
         (0 until 5).foreach { k =>
           val dayDf = docsAll.filter(isInc && dayOf === k).localCheckpoint(true)
-          shuffleWrite.set(0); spilled.set(0)
-          val t0 = System.nanoTime()
-          val st = graft.operators.TrainingData.loadDurablePipelineState(spark, dDir)
-          val out2 = day(st, dayDf)
-          val rows = out2.admitted.count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          graft.operators.TrainingData.appendPipelineDay(spark, dDir,
-            (nChunks + k).toLong, out2.folds)
+          val ((out2, rows), w) = timedDay(
+            graft.operators.TrainingData.loadDurablePipelineState(spark, dDir), dayDf)
+          val (_, wSave) = measure(graft.operators.TrainingData.appendPipelineDay(spark, dDir,
+            (nChunks + k).toLong, out2.folds))
           graft.operators.Materialized.free(out2.admitted)
-          Thread.sleep(300)
-          println(f"SMOKE pipebf_day$k%-11s rows=$rows%-7d sec=$sec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          println(f"SMOKE pipebf_day$k%-11s rows=$rows%-7d sec=${w.sec}%.2f ${io(w, wSave)}")
         }
         // Generation roll at the backfilled scale (round 17, VERDICT
         // r16 #1's final cell): consolidate the 5 seed chunks + 5 days
@@ -1266,52 +1040,34 @@ object ScaleSmoke {
             hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(hp, true)
           }
-          shuffleWrite.set(0); spilled.set(0)
-          val t0 = System.nanoTime()
-          graft.operators.TrainingData.compactPipelineState(
-            spark, dDir, cDir, asOfBatch = (nChunks + 4).toLong)
-          val compactSec = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val st = graft.operators.TrainingData.loadDurablePipelineState(spark, cDir)
-          val loadSec = (System.nanoTime() - t1) / 1e9
-          val t2 = System.nanoTime()
-          val refeed = day(st, docsAll.filter(isInc && dayOf === 4).localCheckpoint(true))
-          val rows = refeed.admitted.count()
-          val refeedSec = (System.nanoTime() - t2) / 1e9
+          val (_, wCompact) = measure(graft.operators.TrainingData.compactPipelineState(
+            spark, dDir, cDir, asOfBatch = (nChunks + 4).toLong))
+          val (st, wLoad) = measure(
+            graft.operators.TrainingData.loadDurablePipelineState(spark, cDir))
+          val ((refeed, rows), wDay) =
+            timedDay(st, docsAll.filter(isInc && dayOf === 4).localCheckpoint(true))
           graft.operators.Materialized.free(refeed.admitted)
-          println(f"SMOKE pipebf_compact    rows=$rows%-7d sec=$compactSec%.2f " +
-            f"loadSec=$loadSec%.2f refeedSec=$refeedSec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          println(f"SMOKE pipebf_compact    rows=$rows%-7d sec=${wCompact.sec}%.2f " +
+            f"loadSec=${wLoad.sec}%.2f refeedSec=${wDay.sec}%.2f ${io(wCompact, wLoad, wDay)}")
         }
       }
       if (enabled("pipeline_days")) locally {
-        shuffleWrite.set(0); spilled.set(0)
-        val t0 = System.nanoTime()
-        val seeded = day(graft.operators.TrainingData.initPipelineState(spark,
+        val ((seeded, n), w0) = timedDay(graft.operators.TrainingData.initPipelineState(spark,
           substrK = Some(8), semCentroids = Some(cents)),
           docsAll.filter(!isInc))
-        val n = seeded.admitted.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"SMOKE pipeline_seed     rows=$n%-9d sec=$sec%.2f " +
-          f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+        println(f"SMOKE pipeline_seed     rows=$n%-9d sec=${w0.sec}%.2f ${io(w0)}")
         graft.operators.Materialized.free(seeded.admitted)
         val stDir = s"$out/pipeline_state"
-        val t1 = System.nanoTime()
-        graft.operators.TrainingData.savePipelineState(spark, seeded.state, stDir)
-        println(f"SMOKE pipeline_save     sec=${(System.nanoTime() - t1) / 1e9}%.2f")
+        val (_, wSave) = measure(
+          graft.operators.TrainingData.savePipelineState(spark, seeded.state, stDir))
+        println(f"SMOKE pipeline_save     sec=${wSave.sec}%.2f")
         var st = graft.operators.TrainingData.loadPipelineState(spark, stDir)
         (0 until 5).foreach { k =>
           val dayDf = docsAll.filter(isInc && dayOf === k).localCheckpoint(true)
-          shuffleWrite.set(0); spilled.set(0)
-          val t2 = System.nanoTime()
-          val out2 = day(st, dayDf)
-          val rows = out2.admitted.count()
-          val daySec = (System.nanoTime() - t2) / 1e9
+          val ((out2, rows), w) = timedDay(st, dayDf)
           st = out2.state
           graft.operators.Materialized.free(out2.admitted)
-          Thread.sleep(300)
-          println(f"SMOKE pipeline_day$k%-10s rows=$rows%-7d sec=$daySec%.2f " +
-            f"shuffleWriteMB=${shuffleWrite.get / 1e6}%.1f spillMB=${spilled.get / 1e6}%.1f")
+          println(f"SMOKE pipeline_day$k%-10s rows=$rows%-7d sec=${w.sec}%.2f ${io(w)}")
         }
       }
     }

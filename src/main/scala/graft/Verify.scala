@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,20 +6,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     ReferenceTripwire.warnIfPopulated()
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Kept so Tables.events' legacy-ns branch can still decode
-      // ns-annotated files (the encoding-adaptive reader handles the
-      // current µs testdata without it).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // µs timestamps in dumps — what DuckDB/pyarrow compare against.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
+    // Graft.session keeps the two confs the dump depends on: legacy
+    // nanosAsLong (so Tables.events' legacy-ns branch can still decode
+    // ns-annotated files) and µs output timestamps (what DuckDB/pyarrow
+    // compare against).
+    val spark = Graft.session(threads = cpus, shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>

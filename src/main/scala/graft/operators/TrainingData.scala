@@ -189,11 +189,10 @@ object TrainingData {
     * across the surviving corpus, token counts re-derive from the
     * scrubbed text, and docs scrubbed to nothing drop. Default None
     * keeps the stage off and the selected set bit-identical to
-    * rounds ≤ 13. With the stage on, `substrStageSizing` (default
-    * true) runs it under the measured spill dials, scoped to the stage
-    * alone (see [[SubstrStageConfs]]); the outputs are bit-identical
-    * either way — partitioning never changes what the operators
-    * compute, only where they spill.
+    * rounds ≤ 13. With the stage on, it runs under the measured spill
+    * dials, scoped to the stage alone (see [[SubstrStageConfs]]) —
+    * partitioning never changes what the operators compute, only where
+    * they spill.
     *
     * `embeddings` (doc_id, embedding) activates the optional SEMANTIC
     * stages 4b/4c between lexical decontam and the mixture (see the
@@ -229,8 +228,7 @@ object TrainingData {
                        semNlist: Option[Int] = None,
                        semFitFraction: Option[Double] = None,
                        semTreeAssign: Option[Boolean] = None,
-                       substrK: Option[Int] = None,
-                       substrStageSizing: Boolean = true): TrainingSet = {
+                       substrK: Option[Int] = None): TrainingSet = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.TextFunctions
 
@@ -276,7 +274,7 @@ object TrainingData {
     // PIPELINE drops docs scrubbed to nothing — a fully-covered doc
     // is pure repetition and carries zero trainable tokens. Default
     // None keeps the stage off and every existing pin bit-identical.
-    // substrStageSizing (round 15, VERDICT r14 #3): the stage's
+    // Stage-scoped sizing (round 15, VERDICT r14 #3): the stage's
     // exchanges run under [[SubstrStageConfs]] — the measured spill
     // rule, scoped by materializing the stage output inside the
     // set/restore window so downstream stages plan under the caller's
@@ -287,7 +285,7 @@ object TrainingData {
     val afterSubstr = substrK match {
       case None => nearDeduped
       case Some(k) =>
-        def stage: DataFrame = {
+        withScopedConfs(spark, SubstrStageConfs) {
           val scrubbed = SubstringDedup
             .scrub(nearDeduped.select(col("doc_id"), col("text")), k)
             .filter(col("kept_text") =!= "")
@@ -298,10 +296,8 @@ object TrainingData {
             .withColumn("n_tokens",
               graft.functions.TextFunctions.tokenCount(col("text")).cast("long"))
             .select(nearDeduped.columns.toIndexedSeq.map(col): _*)
+            .localCheckpoint(true)
         }
-        if (substrStageSizing)
-          withScopedConfs(spark, SubstrStageConfs) { stage.localCheckpoint(true) }
-        else stage
     }
 
     // 4. Decontamination via the library's own containment operator
@@ -445,7 +441,7 @@ object TrainingData {
     // Materialized.free exists to prevent).
     Materialized.free(labels)
     Materialized.free(exactDeduped)
-    if (substrK.isDefined && substrStageSizing) Materialized.free(afterSubstr)
+    if (substrK.isDefined) Materialized.free(afterSubstr)
     if (semWorkingSet != null) Materialized.free(semWorkingSet)
     TrainingSet(selected, packed)
   }
@@ -742,7 +738,6 @@ object TrainingData {
                          benchmarkEmbeddings: Option[DataFrame] = None,
                          minCosine: Double = 0.35,
                          substrK: Option[Int] = None,
-                         substrStageSizing: Boolean = true,
                          arrivalOrder: Boolean = false,
                          md5Fps: Boolean = false,
                          report: Boolean = false): DayAdmission = {
@@ -847,7 +842,7 @@ object TrainingData {
     // batch conventions verbatim, under the same stage-scoped sizing.
     val afterSubstr = (substrK, state.window) match {
       case (Some(k), Some(widx)) =>
-        def stage: DataFrame = {
+        withScopedConfs(spark, SubstrStageConfs) {
           val scrubbed = SubstringDedup
             .incrementalWindowScrub(widx, lexKept.select(col("doc_id"), col("text")), k,
               broadcastIncrement = dayBroadcast)
@@ -859,10 +854,8 @@ object TrainingData {
             .withColumn("n_tokens",
               TextFunctions.tokenCount(col("text")).cast("long"))
             .select(lexKept.columns.toIndexedSeq.map(col): _*)
+            .localCheckpoint(true)
         }
-        if (substrStageSizing)
-          withScopedConfs(spark, SubstrStageConfs) { stage.localCheckpoint(true) }
-        else stage
       case _ => lexKept
     }
     val dayWindow = (substrK, state.window) match {
@@ -961,7 +954,7 @@ object TrainingData {
     Materialized.free(scored)
     Materialized.free(exactKept)
     Materialized.free(lexKept)
-    if (substrK.isDefined && substrStageSizing) Materialized.free(afterSubstr)
+    if (substrK.isDefined) Materialized.free(afterSubstr)
     val newState = PipelineState(newFps, newMinhash, newWindow, newSemantic,
       newLedger)
     DayAdmission(admitted, newState,

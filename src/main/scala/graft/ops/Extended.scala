@@ -367,9 +367,10 @@ object Extended {
     // but costs a full occurrence-scale exchange plus two hash-aggregate
     // passes, and on this corpus bigram repeats within a doc are rare
     // (cnt ≈ 1), so the "compression" shrinks nothing. Measured
-    // (OptProbe CPU, sf0.1): 0.671 → 0.983 CPU-s (+46%). The
-    // double-consumed explode is the cheaper evil; oracle-verified both
-    // ways at all 3 SFs.
+    // (OptProbe CPU, sf0.1; `git show
+    // 17bc3cf:src/main/scala/graft/OptProbe.scala`): 0.671 → 0.983 CPU-s
+    // (+46%). The double-consumed explode is the cheaper evil;
+    // oracle-verified both ways at all 3 SFs.
     val big = documents(s, d)
       .select(col("doc_id"), explode(zip_with(
           slice(toks, lit(1), nAdj), slice(toks, lit(2), nAdj),
@@ -991,7 +992,8 @@ object Extended {
     // consumer that materializes the declared result (Verify's collect,
     // any write): measured at sf0.1, materializing through the lazy
     // sort costs 37.6 CPU-s vs 12.4 for the pipeline itself (OptProbe
-    // q83mat). With the leaking-pair set (869k rows at sf0.1, the
+    // q83mat, `git show 17bc3cf:src/main/scala/graft/OptProbe.scala`).
+    // With the leaking-pair set (869k rows at sf0.1, the
     // smallest relation in the query) checkpointed first, the sampling
     // and sort passes read materialized blocks. The sort still
     // executes identically — same rows, same order; only the number of

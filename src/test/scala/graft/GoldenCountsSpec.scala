@@ -215,10 +215,11 @@ class GoldenCountsSpec extends SparkSpec {
   // Value-checksum pins for the five rows-only queries (VERDICT r8 #4):
   // the driver's oracle can't value-check them (no SQL twin), so their
   // correctness gate was cardinality-only — a wrong value in a kept row
-  // passed. PinProbe.resultChecksum sums per-row xxhash64 over the
+  // passed. Probe.resultChecksum sums per-row xxhash64 over the
   // name-sorted columns (order-independent, duplicate-sensitive): ANY
   // one-value perturbation moves the pin. Values from
-  // `runMain graft.PinProbe checksums`, printed twice per query per
+  // `runMain graft.Probe checksums <dir> <query...>` (PinProbe's
+  // `checksums` mode up to commit 17bc3cf), printed twice per query per
   // scale to prove stability before pinning.
   val checksumPins: Map[String, (Long, Long)] = Map(
     // (sf0.001, sf0.01)
@@ -238,8 +239,8 @@ class GoldenCountsSpec extends SparkSpec {
 
   checksumPins.toSeq.sortBy(_._1).foreach { case (name, (c0001, c001)) =>
     test(s"$name value checksum at sf0.001 and sf0.01") {
-      assert(PinProbe.resultChecksum(SparkEntry.queries(name)(spark, sf0001)) === c0001)
-      assert(PinProbe.resultChecksum(SparkEntry.queries(name)(spark, sf001)) === c001)
+      assert(Probe.resultChecksum(SparkEntry.queries(name)(spark, sf0001)) === c0001)
+      assert(Probe.resultChecksum(SparkEntry.queries(name)(spark, sf001)) === c001)
     }
   }
 
@@ -256,7 +257,7 @@ class GoldenCountsSpec extends SparkSpec {
         when(col("__rn") === 1, col(cols.head) + lit(1)).otherwise(col(cols.head)))
       .drop("__rn")
     assert(perturbed.count() === df.count())
-    assert(PinProbe.resultChecksum(perturbed) !== checksumPins("q46_ann_lsh")._1)
+    assert(Probe.resultChecksum(perturbed) !== checksumPins("q46_ann_lsh")._1)
   }
 
   test("entry flagship returns rows at sf0.001") {
@@ -412,9 +413,9 @@ class GoldenCountsSpec extends SparkSpec {
   // sf0.1 VALUE checksums for the rows-only queries (round 10, VERDICT
   // r9 #6) — their value pins previously stopped at sf0.01, so a
   // scale-only value regression (right counts, wrong kept values) had
-  // no guard. Values from `runMain graft.PinProbe checksums`, printed
+  // no guard. Values from `runMain graft.Probe checksums <dir> <query...>`, printed
   // twice per query to prove stability before pinning; the test session
-  // (different master/AQE/shuffle config than PinProbe's) re-deriving
+  // (different master/AQE/shuffle config than Probe's) re-deriving
   // the same sums is the cross-config determinism evidence. q43 keeps
   // its count pin only: double-evaluating its 2.97M-pair result for a
   // checksum is disproportionate, and banding regressions move counts.
@@ -427,14 +428,14 @@ class GoldenCountsSpec extends SparkSpec {
     // q95 (round 17): oracle-declared at sf0.001/sf0.01; at sf0.1 the
     // DuckDB twin exhausts temp disk (see the sf01Pins note), so the
     // composed day's VALUES pin here — checksum printed twice via the
-    // PinProbe path to prove stability before pinning.
+    // Probe checksums path to prove stability before pinning.
     "q95_pipeline_day_full" -> 1453440673242317105L,
     "q96_pipeline_day_max" -> -8058178038747491086L
   )
 
   sf01ChecksumPins.toSeq.sortBy(_._1).foreach { case (name, pin) =>
     test(s"$name value checksum at sf0.1 (scale pin)") {
-      assert(PinProbe.resultChecksum(SparkEntry.queries(name)(spark, sf01)) === pin)
+      assert(Probe.resultChecksum(SparkEntry.queries(name)(spark, sf01)) === pin)
     }
   }
 
