@@ -1178,22 +1178,12 @@ object Approx {
     * count. No state concentrates on the driver beyond per-level edge
     * counts and the loop's change counter.
     *
-    * `reliable = false` (default) materializes via `localCheckpoint`:
-    * cheap, but executor-local and non-replicated — an executor loss
-    * after materialization makes the RDD unrecoverable and fails the job
-    * with no recompute path. Fine locally and in the bench sandbox; on a
-    * real cluster where the upstream pair pipeline is hours of MinHash
-    * work, pass `reliable = true` to use reliable `checkpoint` instead
-    * (requires `sparkContext.setCheckpointDir` on a fault-tolerant FS) —
-    * an executor loss then re-reads the checkpoint files. */
+    * Materialization goes through [[Materialized.pin]]. */
   def dedupClusters(pairs: DataFrame, maxIter: Int = 20,
-                    reliable: Boolean = false,
                     maxContractLevels: Int = 4,
                     minContractEdges: Long = 100000L,
                     localSolveEdges: Long = 1000000L): DataFrame = {
     require(maxContractLevels >= 1, "at least one contraction level")
-    val materialize: DataFrame => DataFrame =
-      if (reliable) df => df.checkpoint(true) else df => df.localCheckpoint(true)
     val sess = pairs.sparkSession
     val edgeParts = math.max(sess.sessionState.conf.numShufflePartitions,
       sess.sparkContext.defaultParallelism)
@@ -1205,7 +1195,7 @@ object Approx {
     // session-lifetime blocks.
     var tracked = List.empty[DataFrame]
     def mat(df: DataFrame): DataFrame = {
-      val m = materialize(df); tracked ::= m; m
+      val m = Materialized.pin(df); tracked ::= m; m
     }
     // Both edge directions come out of ONE evaluation of the upstream
     // pair pipeline (for q60 that is q59's full MinHash signature +
@@ -1284,8 +1274,8 @@ object Approx {
           .filter(col("a") < col("b"))
           .distinct())
         n = cpairs.count() // metadata-cheap: cpairs is materialized
-        unpersistCheckpoint(curEdges)
-        if (curPairs != null) unpersistCheckpoint(curPairs)
+        Materialized.free(curEdges)
+        if (curPairs != null) Materialized.free(curPairs)
         curPairs = cpairs
         level += 1
         tick(s"level$level edges=$n")
@@ -1308,12 +1298,11 @@ object Approx {
         if (n == 0) sess.range(0).select(col("id").as("cid"), col("id").as("cl"))
         else if (n <= localSolveEdges) localComponents(sess, curPairs)
         else {
-          val l = propagateComponents(sess, curPairs, maxIter, materialize,
-            partsFor(n)).toDF("cid", "cl")
+          val l = propagateComponents(sess, curPairs, maxIter, partsFor(n)).toDF("cid", "cl")
           tracked ::= l
           l
         }
-      unpersistCheckpoint(curPairs)
+      Materialized.free(curPairs)
       tick("loop-done")
       // Compose the level maps back out, innermost → outermost:
       // lab_i(v) = lab_{i+1}(seed_i(v)), identity where deeper levels
@@ -1327,8 +1316,8 @@ object Approx {
             seed("label") === col("cid"), "left")
           .select(seed("id").as("cid"),
             coalesce(col("cl"), seed("label")).as("cl")))
-        unpersistCheckpoint(lab)
-        unpersistCheckpoint(seed)
+        Materialized.free(lab)
+        Materialized.free(seed)
         lab = next
       }
       tick("finalize")
@@ -1338,23 +1327,9 @@ object Approx {
       out
     } finally {
       if (!ok) tracked.foreach(f =>
-        try unpersistCheckpoint(f) catch { case _: Throwable => () })
+        try Materialized.free(f) catch { case _: Throwable => () })
     }
   }
-
-  /** Free every checkpoint RDD backing `df`'s analyzed plan (leaf
-    * `LogicalRDD`s — a projection over a checkpoint counts too).
-    * Checkpoint blocks are session-lifetime unless explicitly freed:
-    * without cleanup every [[dedupClusters]] evaluation pins the O(E)
-    * edge set plus one O(nodes) label set PER ROUND for as long as the
-    * SparkSession lives. Measured on repeated q60 evaluations at sf0.1:
-    * pass times degraded 4.5 → 9.4 → 10.7 s as accumulated blocks forced
-    * storage eviction; on a long-lived production session the leak is
-    * unbounded. Only the final label checkpoint — the blocks backing the
-    * returned DataFrame — stays resident: O(nodes), the caller's working
-    * set. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    Materialized.free(df)
 
   /** Per-phase wall-clock ticker, active under GRAFT_CC_DEBUG. */
   private final class CcTicker(scope: String) {
@@ -1405,16 +1380,14 @@ object Approx {
     * the dense family cliques. Converges in O(log diameter) rounds;
     * throws on non-convergence within maxIter. */
   private def propagateComponents(sess: SparkSession, pairs: DataFrame,
-                                  maxIter: Int,
-                                  materialize: DataFrame => DataFrame,
-                                  edgeParts: Int): DataFrame = {
+                                  maxIter: Int, edgeParts: Int): DataFrame = {
     val tick = new CcTicker("loop")
     // Edges are hash-partitioned and sorted by the join key ONCE before
     // materialization: checkpoint preserves outputPartitioning/ordering,
     // so every propagation round's edges⋈labels sort-merge join elides
     // the edge-side exchange AND sort — only the O(nodes) label side
     // moves per round.
-    val edges = materialize(pairs
+    val edges = Materialized.pin(pairs
       .select(explode(array(
         struct(col("a").as("x"), col("b").as("y")),
         struct(col("b").as("x"), col("a").as("y")))).as("e"))
@@ -1442,7 +1415,7 @@ object Approx {
     // round (the propagated mins — irreducible) and four.
     val align: DataFrame => DataFrame =
       df => df.repartition(edgeParts, col("id")).sortWithinPartitions("id")
-    var checkpointedLabels = materialize(align(edges.groupBy(col("x"))
+    var checkpointedLabels = Materialized.pin(align(edges.groupBy(col("x"))
       .agg(min(col("y")).as("mn"))
       .select(col("x").as("id"), least(col("x"), col("mn")).as("label"))))
     tick("seed")
@@ -1502,15 +1475,15 @@ object Approx {
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
           markChg(col("nlabel"), col("label")).as("chg"))
       chgAcc.reset()
-      val next = materialize(nextPlan)
+      val next = Materialized.pin(nextPlan)
       changed = chgAcc.value
       tick(s"round$i changed=$changed")
-      unpersistCheckpoint(checkpointedLabels)
+      Materialized.free(checkpointedLabels)
       checkpointedLabels = next
       labels = next.select("id", "label")
       i += 1
     }
-    unpersistCheckpoint(edges)
+    Materialized.free(edges)
     // A component with diameter > maxIter would exit with labels still
     // moving — the clustering is then PARTIAL (one true component split
     // across several cluster_ids) and a dedup built on it under-drops.
@@ -1519,7 +1492,7 @@ object Approx {
     if (changed > 0) {
       // Nothing is returned on this path, so the final label checkpoint
       // would otherwise stay resident with no handle to free it.
-      unpersistCheckpoint(checkpointedLabels)
+      Materialized.free(checkpointedLabels)
       throw new IllegalStateException(
         s"dedupClusters did not converge after $maxIter rounds " +
           s"($changed labels still changing); raise maxIter beyond the " +

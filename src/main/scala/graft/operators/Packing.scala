@@ -55,22 +55,18 @@ object Packing {
     * KEY — the stream position is defined by the pair — so an
     * epoch-repeat stream ([[graft.operators.Sampling
     * .quotaSampleEpochs]]) packs by giving each (doc, epoch) copy its
-    * own key; a duplicate PAIR still fails loudly. `reliable = true`
-    * materializes the sized layout via reliable `checkpoint` instead of
-    * `localCheckpoint` (same trade as dedupClusters — requires a
-    * checkpoint dir, survives executor loss). The sized layout (three
-    * longs per doc, plus the order key — e.g. ~40 bytes for an md5 hex
-    * string — with `orderCol`) stays RESIDENT behind the returned plan — it is the working set both phases read, same
-    * contract as dedupClusters' final labels; long-lived sessions
-    * release it with [[Materialized.free]] once done with the result. */
+    * own key; a duplicate PAIR still fails loudly. The sized layout
+    * (pinned through [[Materialized.pin]]; three longs per doc, plus
+    * the order key — e.g. ~40 bytes for an md5 hex string — with
+    * `orderCol`) stays RESIDENT behind the returned plan — it is the
+    * working set both phases read, same contract as dedupClusters'
+    * final labels; long-lived sessions release it with
+    * [[Materialized.free]] once done with the result. */
   def packSequences(docs: DataFrame, seqLen: Long,
                     idCol: String = "doc_id", nCol: String = "n_tokens",
-                    nParts: Int = 0, reliable: Boolean = false,
-                    orderCol: String = ""): DataFrame = {
+                    nParts: Int = 0, orderCol: String = ""): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
     val sess = docs.sparkSession
-    val materialize: DataFrame => DataFrame =
-      if (reliable) df => df.checkpoint(true) else df => df.localCheckpoint(true)
     val parts = if (nParts > 0) nParts
       else math.max(sess.sessionState.conf.numShufflePartitions,
         sess.sparkContext.defaultParallelism)
@@ -87,7 +83,7 @@ object Packing {
     // operator.
     val baseCols = Seq(col(idCol).as("doc_id"), col(nCol).cast("long").as("n"))
     val selCols = if (hasOrd) baseCols :+ col(orderCol).as("ord") else baseCols
-    val sized = materialize(docs.select(selCols: _*)
+    val sized = Materialized.pin(docs.select(selCols: _*)
       .filter(col("n") > 0)
       .repartitionByRange(parts, sortKeys: _*)
       .sortWithinPartitions(sortKeys: _*)
@@ -201,7 +197,7 @@ object Packing {
     * that. */
   def packTokenIds(docs: DataFrame, seqLen: Long,
                    idsCol: String = "token_ids", idCol: String = "doc_id",
-                   nParts: Int = 0, reliable: Boolean = false): DataFrame = {
+                   nParts: Int = 0): DataFrame = {
     // Same bound the streaming twin asserts: a materialized sequence is
     // ONE Spark array, and arrays are int-indexed.
     require(seqLen > 0 && seqLen <= Int.MaxValue,
@@ -209,7 +205,7 @@ object Packing {
     val ids = docs.select(col(idCol), col(idsCol))
     val sized = ids.select(col(idCol),
       size(col(idsCol)).cast("long").as("n_tokens"))
-    val slices = packSequences(sized, seqLen, idCol, "n_tokens", nParts, reliable)
+    val slices = packSequences(sized, seqLen, idCol, "n_tokens", nParts)
     materializeSlices(slices, ids, idsCol, idCol)
   }
 

@@ -112,15 +112,12 @@ object Sampling {
     * evaluations could disagree on pid and corrupt the base-offset
     * join. Four small columns per doc; text stays behind. */
   private def quotaSized(docs: DataFrame, groupCol: String, idCol: String,
-      nCol: String, orderCol: String, nParts: Int,
-      reliable: Boolean): DataFrame = {
+      nCol: String, orderCol: String, nParts: Int): DataFrame = {
     val sess = docs.sparkSession
-    val materialize: DataFrame => DataFrame =
-      if (reliable) df => df.checkpoint(true) else df => df.localCheckpoint(true)
     val parts = if (nParts > 0) nParts
       else math.max(sess.sessionState.conf.numShufflePartitions,
         sess.sparkContext.defaultParallelism)
-    materialize(quotaLayout(docs, groupCol, idCol, nCol, orderCol, parts))
+    Materialized.pin(quotaLayout(docs, groupCol, idCol, nCol, orderCol, parts))
   }
 
   /** Shared core of the quota samplers: every doc's exclusive running
@@ -131,10 +128,9 @@ object Sampling {
     * global rank (constant group, unit counts), so the two-phase
     * machinery has ONE implementation. */
   private[operators] def quotaSpans(docs: DataFrame, groupCol: String,
-      idCol: String, nCol: String, orderCol: String, nParts: Int,
-      reliable: Boolean): DataFrame =
+      idCol: String, nCol: String, orderCol: String, nParts: Int): DataFrame =
     quotaSpansFrom(
-      quotaSized(docs, groupCol, idCol, nCol, orderCol, nParts, reliable),
+      quotaSized(docs, groupCol, idCol, nCol, orderCol, nParts),
       groupCol, idCol, orderCol)
 
   /** The two prefix-sum phases over an already-materialized
@@ -210,10 +206,9 @@ object Sampling {
     * The (`groupCol`, `orderCol`, `idCol`) triple must be unique — the
     * fill order is otherwise undefined; duplicates fail loudly at
     * execution (packSequences' in-window lag guard: range partitioning
-    * makes equal triples adjacent, so the lag sees them). `reliable =
-    * true` swaps localCheckpoint for a reliable checkpoint (requires a
-    * checkpoint dir; survives executor loss). The sized layout (four
-    * small columns per doc) stays RESIDENT behind the returned plan —
+    * makes equal triples adjacent, so the lag sees them). The sized
+    * layout (pinned through [[Materialized.pin]]; four small columns
+    * per doc) stays RESIDENT behind the returned plan —
     * the working set both phases read, same contract as dedupClusters'
     * final labels; long-lived sessions release it with
     * [[Materialized.free]] once done with the result.
@@ -221,9 +216,9 @@ object Sampling {
   def quotaSample(docs: DataFrame, budget: Long,
                   groupCol: String = "lang", idCol: String = "doc_id",
                   nCol: String = "n_tokens", orderCol: String = "rk",
-                  nParts: Int = 0, reliable: Boolean = false): DataFrame = {
+                  nParts: Int = 0): DataFrame = {
     require(budget > 0, "budget must be positive")
-    quotaSpans(docs, groupCol, idCol, nCol, orderCol, nParts, reliable)
+    quotaSpans(docs, groupCol, idCol, nCol, orderCol, nParts)
       .filter(col("cum_before") < lit(budget))
       .select(col("id").as(idCol), col("grp").as(groupCol),
         col("n").as(nCol), col("cum_before"), col("pick_pos"))
@@ -240,13 +235,13 @@ object Sampling {
   def quotaSampleBudgets(docs: DataFrame, budgets: Map[String, Long],
                          groupCol: String = "lang", idCol: String = "doc_id",
                          nCol: String = "n_tokens", orderCol: String = "rk",
-                         nParts: Int = 0, reliable: Boolean = false): DataFrame = {
+                         nParts: Int = 0): DataFrame = {
     require(budgets.nonEmpty, "budgets must not be empty")
     require(budgets.values.forall(_ > 0), "every budget must be positive")
     val budgetFor = budgets.foldLeft(lit(0L)) { case (acc, (g, b)) =>
       when(col("grp") === lit(g), lit(b)).otherwise(acc)
     }
-    quotaSpans(docs, groupCol, idCol, nCol, orderCol, nParts, reliable)
+    quotaSpans(docs, groupCol, idCol, nCol, orderCol, nParts)
       .filter(col("cum_before") < budgetFor)
       .select(col("id").as(idCol), col("grp").as(groupCol),
         col("n").as(nCol), col("cum_before"), col("pick_pos"))
@@ -293,8 +288,7 @@ object Sampling {
   def quotaSampleEpochs(docs: DataFrame, budgets: Map[String, Long],
                         groupCol: String = "lang", idCol: String = "doc_id",
                         nCol: String = "n_tokens", orderCol: String = "rk",
-                        nParts: Int = 0, reliable: Boolean = false,
-                        maxEpochs: Long = 10000L): DataFrame = {
+                        nParts: Int = 0, maxEpochs: Long = 10000L): DataFrame = {
     require(budgets.nonEmpty, "budgets must not be empty")
     require(budgets.values.forall(_ > 0), "every budget must be positive")
     require(maxEpochs > 0, "maxEpochs must be positive")
@@ -304,7 +298,7 @@ object Sampling {
     // Masses aggregate the materialized LAYOUT directly — summing the
     // spans plan instead would drag the phase-1 bases aggregate and the
     // broadcast base join along for numbers a plain groupBy already has.
-    val sized = quotaSized(docs, groupCol, idCol, nCol, orderCol, nParts, reliable)
+    val sized = quotaSized(docs, groupCol, idCol, nCol, orderCol, nParts)
     val spans = quotaSpansFrom(sized, groupCol, idCol, orderCol)
     val masses = sized.groupBy(col("grp")).agg(sum(col("n")).as("m"))
       .filter(col("m") > 0)

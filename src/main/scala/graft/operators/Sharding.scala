@@ -40,11 +40,9 @@ object Sharding {
 
   /** Shuffle-shard `rows` by `idCol`. `salt` selects the permutation
     * (an epoch index in training terms: different salt, different
-    * order, same exact balance). `reliable = true` materializes the
-    * ranked layout via reliable `checkpoint` instead of
-    * `localCheckpoint` (the dedupClusters/packSequences trade). The
-    * ranked layout stays RESIDENT behind the returned plan — release
-    * with [[Materialized.free]] once consumed.
+    * order, same exact balance). The ranked layout is pinned through
+    * [[Materialized.pin]] and stays RESIDENT behind the returned plan —
+    * release it with [[Materialized.free]] once consumed.
     *
     * md5 hex, not xxhash64: the declared q80 replays this rank in
     * DuckDB value-for-value, and md5-of-the-same-string is the one
@@ -62,7 +60,7 @@ object Sharding {
     * training row. */
   def shuffleShards(rows: DataFrame, nShards: Int,
                     idCol: String = "seq_id", salt: Long = 0L,
-                    nParts: Int = 0, reliable: Boolean = false): DataFrame = {
+                    nParts: Int = 0): DataFrame = {
     require(nShards > 0, s"nShards $nShards must be positive")
     val keyed = rows.select(col(idCol).as("sid"))
       .withColumn("srk", md5(concat_ws(":",
@@ -74,7 +72,7 @@ object Sharding {
     // are equal, but the duplicate-key guard is folded into cum_before
     // (the assert_true rides the running sum) — projecting pick_pos
     // alone would let column pruning silently discard the guard.
-    Sampling.quotaSpans(keyed, "sgrp", "sid", "sone", "srk", nParts, reliable)
+    Sampling.quotaSpans(keyed, "sgrp", "sid", "sone", "srk", nParts)
       .select(col("id").as(idCol),
         pmod(col("cum_before"), n).as("shard"),
         expr(s"cum_before div ${nShards.toLong}").as("pos"))

@@ -84,7 +84,7 @@ object TrainingData {
     * finding); scoping means set → materialize the stage → restore, so
     * the rest of the pipeline plans under the caller's confs.
     * files.maxPartitionBytes is deliberately NOT scoped here: stage
-    * 3b's input is an upstream localCheckpoint, not a file scan, so
+    * 3b's input is an upstream pin, not a file scan, so
     * the dial cannot reach the map-side task size mid-pipeline. */
   private[operators] val SubstrStageConfs: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m",
@@ -94,7 +94,7 @@ object TrainingData {
   /** [[SubstrStageConfs]] plus a 16 MB scan split — the dial set for
     * STORE compactions ([[SubstringDedup.compactWindowIndexStore]],
     * [[compactPipelineState]]'s window roll). Mid-pipeline, stage 3b's
-    * input is a localCheckpoint and `files.maxPartitionBytes` cannot
+    * input is a pin and `files.maxPartitionBytes` cannot
     * reach it (the SubstrStageConfs comment); a compaction's input IS a
     * parquet scan, and the scan split is the dial that sizes the
     * MAP-SIDE partial hash-aggregate over the near-unique hash keys — a
@@ -238,13 +238,12 @@ object TrainingData {
     // dedup together, and the one text-carrying shuffle doubles as the
     // dedup exchange. Materialized: the shared working set.
     val wFp = Window.partitionBy("clean_fp").orderBy("doc_id")
-    val exactDeduped =
+    val exactDeduped = Materialized.pin(
       TextFunctions.curateColumns(docs, minQuality, maxRepetition, minTokens)
         .filter(col("keep"))
         .withColumn("rn", row_number().over(wFp))
         .filter(col("rn") === 1)
-        .select(col("doc_id"), col("text"), col("lang"), col("n_tokens"))
-        .localCheckpoint(true)
+        .select(col("doc_id"), col("text"), col("lang"), col("n_tokens")))
 
     // 3. Near-dup dedup: the mass-routed MinHash family finds pairs,
     // connected components pick one keeper per near-dup cluster. Docs
@@ -290,13 +289,12 @@ object TrainingData {
             .scrub(nearDeduped.select(col("doc_id"), col("text")), k)
             .filter(col("kept_text") =!= "")
             .select(col("doc_id"), col("kept_text"))
-          nearDeduped.drop("text", "n_tokens")
+          Materialized.pin(nearDeduped.drop("text", "n_tokens")
             .join(scrubbed, Seq("doc_id"))
             .withColumn("text", col("kept_text")).drop("kept_text")
             .withColumn("n_tokens",
               graft.functions.TextFunctions.tokenCount(col("text")).cast("long"))
-            .select(nearDeduped.columns.toIndexedSeq.map(col): _*)
-            .localCheckpoint(true)
+            .select(nearDeduped.columns.toIndexedSeq.map(col): _*))
         }
     }
 
@@ -345,7 +343,7 @@ object TrainingData {
         // distribution, or a genuinely contaminated batch); the IVF
         // fit cannot run on zero rows, and "no survivors" needs no
         // dedup anyway.
-        semWorkingSet = afterDecon.localCheckpoint(true)
+        semWorkingSet = Materialized.pin(afterDecon)
         // The IVF quantizer must SCALE with the survivor count or the
         // within-cell pairing degenerates toward all-pairs: at the 100×
         // smoke (~440k survivor vectors) semanticDedup's nlist=8
@@ -540,7 +538,7 @@ object TrainingData {
     * separately so a durable loop can persist the day as `batch_id=`
     * partition appends ([[appendPipelineDay]]) instead of the
     * O(state) rewrite [[savePipelineState]] pays. Every frame is
-    * already localCheckpointed by the day's run (writing it re-reads
+    * already pinned by the day's run (writing it re-reads
     * materialized blocks, no recompute):
     *  - `fps` — the day's KEPT fingerprints (day-unique,
     *    state-disjoint: appending preserves the set property).
@@ -696,7 +694,7 @@ object TrainingData {
     * This is a DAY operator: past [[BroadcastIncrementMaxTokens]] the
     * screens automatically drop their increment-broadcast hints (the
     * joins re-plan as shuffles and stay correct — spec-pinned), but the
-    * fold frames are still localCheckpointed, i.e. O(day) cached
+    * fold frames are still pinned, i.e. O(day) cached
     * blocks. Backfilling a SEED corpus through one giant call makes
     * those O(corpus) — measured at the 1000×-class point (5M docs,
     * ~160M window rows) to exhaust a 48 GB single-JVM heap at the fold
@@ -721,7 +719,7 @@ object TrainingData {
     * already-ingested and immutable either way.
     *
     * State lineage: the returned state's new branches are
-    * localCheckpointed day frames; the state frames accumulate one
+    * pinned day frames; the state frames accumulate one
     * union level per day — bound a LONG-lived driver loop with
     * [[savePipelineState]] / [[loadPipelineState]] (which also makes
     * the loop restartable) on whatever cadence its plan-analysis cost
@@ -769,11 +767,10 @@ object TrainingData {
         c.withColumn("clean_fp", md5(TextFunctions.redactPiiPortable(col("text"))))
       else c
     }
-    val scored = curated
+    val scored = Materialized.pin(curated
       .filter(col("keep"))
       .select(col("doc_id"), col("text"), col("lang"), col("n_tokens"),
-        col("clean_fp"))
-      .localCheckpoint(true)
+        col("clean_fp")))
     // Day-sized or not? Every incremental screen's plan broadcasts the
     // INCREMENT side (the operators' premise: a daily batch against an
     // ingested corpus), which is wrong exactly once — when a seed
@@ -795,11 +792,10 @@ object TrainingData {
     val hitFps = state.fingerprints
       .join(bcastIf(dayFps), Seq("clean_fp"), "left_semi").distinct()
     val wFp = Window.partitionBy("clean_fp").orderBy("doc_id")
-    val exactKept = scored
+    val exactKept = Materialized.pin(scored
       .join(bcastIf(hitFps), Seq("clean_fp"), "left_anti")
       .withColumn("rn", row_number().over(wFp))
-      .filter(col("rn") === 1).drop("rn")
-      .localCheckpoint(true)
+      .filter(col("rn") === 1).drop("rn"))
     // Fold: fp equality is transitive, so (unlike the near-dup folds)
     // only the KEPT fps need to enter — a day doc whose fp is already
     // present adds nothing, and exactKept's fps are day-unique and
@@ -809,7 +805,7 @@ object TrainingData {
     // lineage reference into exactKept's full-width checkpoint would
     // pin every day's surviving text in block storage for the state's
     // lifetime — O(corpus text) retained where O(fp set) is meant.
-    val keptFps = exactKept.select(col("clean_fp")).localCheckpoint(true)
+    val keptFps = Materialized.pin(exactKept.select(col("clean_fp")))
     val newFps = state.fingerprints.unionByName(keptFps)
 
     // 3. Lexical near-dup screen + fold. ALL exact survivors fold
@@ -823,14 +819,13 @@ object TrainingData {
     // once per consumer).
     val dayText = exactKept.select(col("doc_id"), col("text"))
     val (daySetsRaw, dayBandsRaw) = Approx.md5SetsAndBands(spark, dayText)
-    val daySets = daySetsRaw.localCheckpoint(true)
-    val dayBands = dayBandsRaw.localCheckpoint(true)
+    val daySets = Materialized.pin(daySetsRaw)
+    val dayBands = Materialized.pin(dayBandsRaw)
     val lexKeepIds = Approx.incrementalDedupPrebuilt(spark, state.minhash,
         dayText.select(col("doc_id")), daySets, dayBands, minJaccard,
         arrivalOrder)
       .filter(col("verdict") === "keep").select(col("doc_id"))
-    val lexKept = exactKept.join(lexKeepIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+    val lexKept = Materialized.pin(exactKept.join(lexKeepIds, Seq("doc_id"), "left_semi"))
     val newMinhash = Approx.advanceIndexPrebuilt(state.minhash, daySets, dayBands)
 
     // 3b. Substring screen + fold (present iff the state carries the
@@ -848,21 +843,19 @@ object TrainingData {
               broadcastIncrement = dayBroadcast)
             .filter(col("kept_text") =!= "")
             .select(col("doc_id"), col("kept_text"))
-          lexKept.drop("text", "n_tokens")
+          Materialized.pin(lexKept.drop("text", "n_tokens")
             .join(scrubbed, Seq("doc_id"))
             .withColumn("text", col("kept_text")).drop("kept_text")
             .withColumn("n_tokens",
               TextFunctions.tokenCount(col("text")).cast("long"))
-            .select(lexKept.columns.toIndexedSeq.map(col): _*)
-            .localCheckpoint(true)
+            .select(lexKept.columns.toIndexedSeq.map(col): _*))
         }
       case _ => lexKept
     }
     val dayWindow = (substrK, state.window) match {
       case (Some(k), Some(_)) =>
-        Some(SubstringDedup.buildWindowIndex(
-          lexKept.select(col("doc_id"), col("text")), k)
-          .localCheckpoint(true))
+        Some(Materialized.pin(SubstringDedup.buildWindowIndex(
+          lexKept.select(col("doc_id"), col("text")), k)))
       case _ => None
     }
     val newWindow = (substrK, state.window, dayWindow) match {
@@ -896,10 +889,9 @@ object TrainingData {
           .join(lexClean.select(col("doc_id")), Seq("doc_id"))
         val afterDecon =
           semDecontamSurvivors(spark, emb, benchmarkEmbeddings, minCosine)
-        val dayAssigned = Approx.buildSemanticIndex(
+        val dayAssigned = Materialized.pin(Approx.buildSemanticIndex(
             afterDecon.select(col("doc_id").as("vec_id"), col("embedding")),
-            semIdx.centroids)
-          .vectors.localCheckpoint(true)
+            semIdx.centroids).vectors)
         dayVectors = Some(dayAssigned)
         val keepers = Approx.incrementalSemanticDedup(semIdx,
             dayAssigned.select(col("vec_id"), col("embedding")), minCosine,
@@ -921,9 +913,8 @@ object TrainingData {
       case Some(c) => clean.withColumn("n_tokens", c.cast("long"))
       case None => clean
     }
-    val mixIn = counted.select(col("doc_id"), col("lang"), col("n_tokens"),
-        md5(concat_ws(":", lit(salt), col("doc_id").cast("string"))).as("rk"))
-      .localCheckpoint(true)
+    val mixIn = Materialized.pin(counted.select(col("doc_id"), col("lang"),
+      col("n_tokens"), md5(concat_ws(":", lit(salt), col("doc_id").cast("string"))).as("rk")))
     val remaining = budgets.flatMap { case (l, b) =>
       val left = b - state.ledger.getOrElse(l, 0L)
       if (left > 0) Some(l -> left) else None
@@ -948,9 +939,10 @@ object TrainingData {
 
     // Every returned frame now reads its OWN materialized blocks (the
     // slim fp checkpoint, the day signature frames, the day window/
-    // vector checkpoints, mixIn), so the day's transient full-width
-    // checkpoints can be released — a long-lived daily loop must not
-    // retain one O(day) text-bearing cache per day.
+    // vector checkpoints, admitted's layout — or mixIn when no budget
+    // is left), so the day's transient checkpoints can be released — a
+    // long-lived daily loop must not retain one O(day) cache per day.
+    if (remaining.nonEmpty) Materialized.free(mixIn)
     Materialized.free(scored)
     Materialized.free(exactKept)
     Materialized.free(lexKept)
@@ -1237,9 +1229,10 @@ object TrainingData {
     roll("bands", StructType(refBands.schema.fields :+
       StructField("inc", BooleanType)))
     if (StateStore.exists(spark, s"$dir/centroids")) {
-      val centDf = spark.read.parquet(s"$dir/centroids").localCheckpoint()
+      val centDf = Materialized.pin(spark.read.parquet(s"$dir/centroids"))
       val cents = Approx.semanticCentroidsFromDF(centDf)
       centDf.write.mode("overwrite").parquet(s"$outDir/centroids")
+      Materialized.free(centDf)
       roll("vectors", Approx.buildSemanticIndex(
         Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"), cents)
         .vectors.schema)

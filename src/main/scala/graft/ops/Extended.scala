@@ -983,7 +983,7 @@ object Extended {
       .filter(col("split_a") =!= col("split_b"))
       .select(col("a"), col("b"), col("jaccard"), col("split_a"), col("split_b"))
     // Materialize the accepted pair set with ONE action before the
-    // declared global sort (round 18; the q60 localCheckpoint idiom —
+    // declared global sort (round 18; the q60 pin idiom —
     // intra-query materialization, not cross-run caching). A lazy
     // orderBy is a RangePartitioner whose boundary-sampling job
     // evaluates the ENTIRE upstream MinHash pipeline once and whose
@@ -994,14 +994,14 @@ object Extended {
     // sort costs 37.6 CPU-s vs 12.4 for the pipeline itself (OptProbe
     // q83mat, `git show 17bc3cf:src/main/scala/graft/OptProbe.scala`).
     // With the leaking-pair set (869k rows at sf0.1, the
-    // smallest relation in the query) checkpointed first, the sampling
+    // smallest relation in the query) pinned first, the sampling
     // and sort passes read materialized blocks. The sort still
     // executes identically — same rows, same order; only the number of
     // upstream evaluations changes. Callers release the block via
     // graft.operators.Materialized.free once done (the q60 contract;
     // Bench detects the eager construction structurally and rebuilds
     // per pass, so the materialization stays inside the timed region).
-    accepted.localCheckpoint(true).orderBy("a", "b")
+    graft.operators.Materialized.pin(accepted).orderBy("a", "b")
   }
 
   /** q84's literal coarse-quantizer centroids — the [[Q71Planes]]
@@ -1325,9 +1325,8 @@ object Extended {
     import org.apache.spark.sql.expressions.Window
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     val isNew = pmod(col("doc_id"), lit(10)) >= 7
-    val inc = docs.filter(isNew)
-      .withColumn("day", ntile(3).over(Window.orderBy("doc_id")))
-      .localCheckpoint(true)
+    val inc = graft.operators.Materialized.pin(docs.filter(isNew)
+      .withColumn("day", ntile(3).over(Window.orderBy("doc_id"))))
     var idx = graft.operators.Approx.buildMinHashIndex(s, docs.filter(!isNew))
     val perDay = (1 to 3).map { k =>
       val dayDf = inc.filter(col("day") === k).select("doc_id", "text")
@@ -1353,9 +1352,8 @@ object Extended {
     val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
     val isNew = pmod(col("vec_id"), lit(10)) >= 7
     val cents = Q84Centroids.map(_.map(_.toDouble))
-    val inc = emb.filter(isNew)
-      .withColumn("day", ntile(3).over(Window.orderBy("vec_id")))
-      .localCheckpoint(true)
+    val inc = graft.operators.Materialized.pin(emb.filter(isNew)
+      .withColumn("day", ntile(3).over(Window.orderBy("vec_id"))))
     var idx = graft.operators.Approx.buildSemanticIndex(emb.filter(!isNew), cents)
     val perDay = (1 to 3).map { k =>
       val dayDf = inc.filter(col("day") === k).select("vec_id", "embedding")

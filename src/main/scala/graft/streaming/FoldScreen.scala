@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.operators.Materialized
+
 /** The one microbatch seam of the fold-then-screen streaming twins
   * ([[StreamingIncrementalDedup]], [[StreamingIncrementalSemantic]],
   * [[StreamingTrainingPipeline]]): each twin is its batch operator's
@@ -18,15 +20,20 @@ private[streaming] object FoldScreen {
     * operators perform (band_match_before, float_dot, mip_assign …).
     * `step(batch, id)` must return an already materialized frame
     * (collect-safe, no further job on delivery); it goes to `onBatch`
-    * as is. */
+    * as is. Once `onBatch` returns, the batch cut and the step's frame
+    * are freed ([[Materialized.free]]), so the verdict frame is valid
+    * only inside `onBatch`: collect or write it there. */
   def writer(spark: SparkSession, increments: DataFrame, cols: Seq[String])
             (step: (DataFrame, Long) => DataFrame)
             (onBatch: (Long, DataFrame) => Unit): DataStreamWriter[Row] =
     increments.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val cp = batch.select(cols.map(col): _*).localCheckpoint()
-        onBatch(id, step(spark.createDataFrame(cp.rdd, cp.schema), id))
+        val cp = Materialized.pin(batch.select(cols.map(col): _*))
+        try {
+          val out = step(spark.createDataFrame(cp.rdd, cp.schema), id)
+          try onBatch(id, out) finally Materialized.free(out)
+        } finally Materialized.free(cp)
       }
 
   /** A fresh state directory owned by one writer, for twins started

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
-import graft.operators.Approx
+import graft.operators.{Approx, Materialized}
 import graft.operators.Approx.MinHashIndex
 
 /** Streaming incremental dedup — the ingest-time twin of the batch
@@ -64,7 +64,8 @@ import graft.operators.Approx.MinHashIndex
   * signature work over a stream's lifetime; the fold writes them
   * once. Verdicts are delivered through `onBatch` (batch id, verdict
   * frame) — the frame is already materialized (collect-safe) when the
-  * callback runs.
+  * callback runs, and valid only inside it: its blocks are freed when
+  * the callback returns.
   */
 object StreamingIncrementalDedup {
 
@@ -80,8 +81,7 @@ object StreamingIncrementalDedup {
     val built = Approx.buildMinHashIndex(spark, index.select("doc_id", "text"))
     // Pin the static index's signatures once — the stream would
     // otherwise re-run the index's full chain every trigger.
-    val pinned = MinHashIndex(
-      built.sets.localCheckpoint(true), built.bands.localCheckpoint(true))
+    val pinned = MinHashIndex(Materialized.pin(built.sets), Materialized.pin(built.bands))
     writer(spark, pinned, increments, stateDir)(onBatch)
   }
 
@@ -120,7 +120,7 @@ object StreamingIncrementalDedup {
     val advanced = Approx.advanceIndexPrebuilt(index,
       StateStore.readFolded(spark, s"$stateDir/sets", setsB.schema),
       StateStore.readFolded(spark, s"$stateDir/bands", bandsB.schema))
-    Approx.incrementalDedup(spark, advanced, batch).localCheckpoint()
+    Materialized.pin(Approx.incrementalDedup(spark, advanced, batch))
   }
 
   /** Start the stream and return the query (test convenience). */

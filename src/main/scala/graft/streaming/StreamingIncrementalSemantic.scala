@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
-import graft.operators.Approx
+import graft.operators.{Approx, Materialized}
 import graft.operators.Approx.SemanticIndex
 
 /** Streaming incremental SEMANTIC dedup — the ingest-time twin of the
@@ -49,7 +49,8 @@ import graft.operators.Approx.SemanticIndex
   * (vec_id, embedding, cell, nrm) rows, written once per batch.
   * Verdicts are delivered through `onBatch` (batch id, verdict frame)
   * — the frame is already materialized (collect-safe) when the
-  * callback runs.
+  * callback runs, and valid only inside it: its blocks are freed when
+  * the callback returns.
   */
 object StreamingIncrementalSemantic {
 
@@ -87,7 +88,7 @@ object StreamingIncrementalSemantic {
       StateStore.writePartition(vb, s"$stateDir/vectors", id)
     val advanced = Approx.advanceSemanticIndexAssigned(index,
       StateStore.readFolded(spark, s"$stateDir/vectors", vb.schema))
-    Approx.incrementalSemanticDedup(advanced, batch, minSim).localCheckpoint()
+    Materialized.pin(Approx.incrementalSemanticDedup(advanced, batch, minSim))
   }
 
   /** Start the stream and return the query (test convenience). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
-import graft.operators.TrainingData
+import graft.operators.{Materialized, TrainingData}
 
 /** Streaming twin of the COMPOSED incremental pipeline
   * ([[graft.operators.TrainingData.advanceTrainingSet]]): each
@@ -43,7 +43,8 @@ import graft.operators.TrainingData
   * Scale shape: identical to the driver loop's (the shell adds one
   * state load per trigger — explicit-schema partition-pruned scans —
   * and the O(batch) appends); admissions are delivered through
-  * `onBatch(id, admitted)` already materialized. `embeddings` is a
+  * `onBatch(id, admitted)` already materialized, and valid only inside
+  * the callback (its blocks are freed when it returns). `embeddings` is a
   * STATIC side table keyed by doc_id (the batch joins out its own
   * vectors), matching the batch API's `dayEmbeddings` convention.
   */
@@ -103,7 +104,8 @@ object StreamingTrainingPipeline {
       benchmarkEmbeddings = benchmarkEmbeddings, minCosine = minCosine,
       substrK = substrK, arrivalOrder = arrivalOrder, md5Fps = md5Fps,
       report = report)
-    val admitted = out.admitted.localCheckpoint()
+    val admitted = Materialized.pin(out.admitted)
+    Materialized.free(out.admitted)
     TrainingData.appendPipelineDay(spark, stateDir, id, out.folds)
     // With `report` on, the day's ingest-health frame lands in the
     // store's own health log (`$stateDir/health/batch_id=N`) — an
@@ -113,6 +115,9 @@ object StreamingTrainingPipeline {
     // does not consolidate it and loads never read it.
     out.health.foreach(h =>
       graft.sources.StateStore.writePartition(h, s"$stateDir/health", id))
+    // Written and health-logged: the day's pinned fold frames are done.
+    val f = out.folds
+    (Seq(f.fps, f.sets, f.bands) ++ f.window ++ f.vectors).foreach(Materialized.free)
     admitted
   }
 

@@ -785,19 +785,19 @@ class CapabilitySpec extends SparkSpec {
       s"${leaked.size} checkpoint RDDs left resident — expected at most the final labels")
   }
 
-  test("dedupClusters: reliable=true uses durable checkpoints and matches the local path (VERDICT r5 #6)") {
+  test("dedupClusters under a checkpoint dir pins durably and matches the local path") {
     import spark.implicits._
     // On a real cluster localCheckpoint storage dies with its executor;
-    // reliable=true must route every materialization through the
-    // fault-tolerant checkpoint dir and produce the identical clustering.
+    // with a checkpoint dir set every Materialized.pin must go through
+    // that fault-tolerant dir and produce the identical clustering.
     val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckptDir)
     try {
       // two components: a chain 0-1-2-3 and a triangle 10-11-12
       val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (10L, 12L))
         .toDF("a", "b")
-      val durable = Approx.dedupClusters(pairs, reliable = true).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val durable = org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, ckptDir) {
+        Approx.dedupClusters(pairs).collect()
+      }.map(r => r.getLong(0) -> r.getLong(1)).toMap
       val local = Approx.dedupClusters(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(durable === local)
@@ -807,6 +807,39 @@ class CapabilitySpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, s"no checkpoint files written under $ckptDir")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptDir))
+    }
+  }
+
+  test("pin: q83 re-run after its blocks are freed fails if local, matches if durable") {
+    // Block loss under a pinned result (an executor dying, simulated by
+    // dropping the pin's blocks): a local pin has no lineage to
+    // recompute from and must fail loudly; under a checkpoint dir the
+    // same steps re-read the checkpoint files and return the same rows.
+    // q83's pair set is pinned inside its declared plan, an operator
+    // that never had a reliable flag of its own. A re-run plans the
+    // frame afresh (`select("*")`): re-collecting the same frame would
+    // reuse its sort's shuffle output and never read the pin again.
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("*").collect().map(_.toSeq.mkString("|")).toSeq
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val localDf = graft.SparkEntry.queries("q83_split_leakage")(spark, sf0001)
+    val want = rows(localDf)
+    assert(want.nonEmpty, "q83 at sf0.001 must report leaking pairs")
+    graft.operators.Materialized.free(localDf)
+    val lost = intercept[Exception](rows(localDf))
+    assert(messages(lost).exists(m => m.contains("Checkpoint block") && m.contains("not found")),
+      s"expected Spark's lost checkpoint block error, got: $lost")
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    try {
+      org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, ckptDir) {
+        val durableDf = graft.SparkEntry.queries("q83_split_leakage")(spark, sf0001)
+        assert(rows(durableDf) === want)
+        graft.operators.Materialized.free(durableDf)
+        assert(rows(durableDf) === want, "the durable pin did not survive its blocks")
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptDir))
     }

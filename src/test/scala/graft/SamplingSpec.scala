@@ -119,11 +119,8 @@ class SamplingSpec extends SparkSpec {
     picked.count()
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty, "expected the sized layout checkpoint to be resident")
+    // free waits for the removal, so the block is gone on return
     graft.operators.Materialized.free(picked)
-    // unpersist(blocking = false) — poll briefly for the async release
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (spark.sparkContext.getPersistentRDDs.keySet.exists(added)
-        && System.nanoTime() < deadline) Thread.sleep(50)
     assert(!spark.sparkContext.getPersistentRDDs.keySet.exists(added),
       "quota layout block still resident after Materialized.free")
   }

@@ -769,12 +769,18 @@ class StreamingSpec extends SparkSpec {
         v.collect().foreach(r => got.add((r.getLong(0), r.getString(1))))
     }
     val nDays = 10
+    // RDDs resident after each microbatch: the static index stays
+    // pinned throughout, and a batch may leave nothing else behind.
+    val resident = scala.collection.mutable.Buffer.empty[Set[Int]]
     try {
       incDocs.grouped(math.max(1, (incDocs.length + nDays - 1) / nDays)).foreach { b =>
         stream.addData(b.toSeq)
         q.processAllAvailable()
+        resident += spark.sparkContext.getPersistentRDDs.keySet.toSet
       }
     } finally q.stop()
+    assert(resident.last -- resident.head === Set.empty[Int],
+      s"microbatches left blocks resident: ${resident.map(_.size).mkString(" → ")}")
     val batch = SparkEntry.queries("q86_incremental_dedup")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val streamed = got.toArray(Array.empty[(Long, String)]).sortBy(_._1)
