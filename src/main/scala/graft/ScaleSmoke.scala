@@ -333,7 +333,7 @@ object ScaleSmoke {
         spark.read.parquet(s"$out/mhadv/bands"))
       val stateDir = s"$out/mhadv_state_${System.nanoTime()}"
       (0 until 5).foreach { k =>
-        val dayDf = docs.filter(isInc && dayOf === k).localCheckpoint(true)
+        val dayDf = graft.operators.Materialized.pin(docs.filter(isInc && dayOf === k))
         val (n, w) = measure(rowsOf(graft.streaming.StreamingIncrementalDedup
           .foldAndScreen(spark, stored, stateDir, dayDf, k.toLong)))
         println(f"SMOKE q86_advance_day$k%-9s rows=$n%-9d sec=${w.sec}%.2f ${io(w)}")
@@ -354,7 +354,7 @@ object ScaleSmoke {
         spark.read.parquet(s"$out/semadv/vectors"), cents)
       val semState = s"$out/semadv_state_${System.nanoTime()}"
       (0 until 5).foreach { k =>
-        val dayDf = embAll.filter(isIncV && dayOfV === k).localCheckpoint(true)
+        val dayDf = graft.operators.Materialized.pin(embAll.filter(isIncV && dayOfV === k))
         val (n, w) = measure(rowsOf(graft.streaming.StreamingIncrementalSemantic
           .foldAndScreen(spark, semStored, semState, dayDf, k.toLong, 0.98)))
         println(f"SMOKE q88_advance_day$k%-9s rows=$n%-9d sec=${w.sec}%.2f ${io(w)}")
@@ -381,7 +381,7 @@ object ScaleSmoke {
         .appendWindowIndexDay(docs.filter(!isInc), k = 8, wdir, batchId = -1L)
       (0 until 5).foreach { k =>
         val stored = graft.operators.SubstringDedup.readWindowIndex(spark, wdir)
-        val dayDf = docs.filter(isInc && dayOf === k).localCheckpoint(true)
+        val dayDf = graft.operators.Materialized.pin(docs.filter(isInc && dayOf === k))
         val (n, wScreen) = measure(rowsOf(graft.operators.SubstringDedup
           .incrementalWindowStats(stored, dayDf, k = 8)))
         val (_, wFold) = measure(graft.operators.SubstringDedup
@@ -855,7 +855,7 @@ object ScaleSmoke {
         graft.operators.Materialized.free(seeded.admitted)
         var st = seeded.state
         (0 until 5).foreach { k =>
-          val dayDf = docsAll.filter(isInc && dayOf === k).localCheckpoint(true)
+          val dayDf = graft.operators.Materialized.pin(docsAll.filter(isInc && dayOf === k))
           val ((out2, rows), w) = timedDay(st, dayDf, arrival = true)
           st = out2.state
           graft.operators.Materialized.free(out2.admitted)
@@ -889,7 +889,7 @@ object ScaleSmoke {
           graft.operators.TrainingData.appendPipelineDay(spark, dDir, 0L, seeded.folds))
         println(f"SMOKE pipedur_seedsave  sec=${wSave.sec}%.2f")
         (1 to 5).foreach { k =>
-          val dayDf = docsAll.filter(isInc && dayOf === (k - 1)).localCheckpoint(true)
+          val dayDf = graft.operators.Materialized.pin(docsAll.filter(isInc && dayOf === (k - 1)))
           val (st, wLoad) = measure(
             graft.operators.TrainingData.loadDurablePipelineState(spark, dDir))
           val ((out2, rows), wDay) = timedDay(st, dayDf)
@@ -910,7 +910,7 @@ object ScaleSmoke {
           val (st, wLoad) = measure(graft.operators.TrainingData.loadDurablePipelineState(
             spark, s"$out/pipeline_dstate_c"))
           val ((refeed, rows), wDay) =
-            timedDay(st, docsAll.filter(isInc && dayOf === 4).localCheckpoint(true))
+            timedDay(st, graft.operators.Materialized.pin(docsAll.filter(isInc && dayOf === 4)))
           graft.operators.Materialized.free(refeed.admitted)
           println(f"SMOKE pipedur_compact   rows=$rows%-7d sec=${wCompact.sec}%.2f " +
             f"loadSec=${wLoad.sec}%.2f refeedSec=${wDay.sec}%.2f ${io(wCompact, wLoad, wDay)}")
@@ -1010,8 +1010,8 @@ object ScaleSmoke {
         (0 until nChunks).foreach { c =>
           val lo = nDocs.toDouble * c / nChunks
           val hi = nDocs.toDouble * (c + 1) / nChunks
-          val chunk = docsAll.filter(!isInc &&
-            col("doc_id") >= lo && col("doc_id") < hi).localCheckpoint(true)
+          val chunk = graft.operators.Materialized.pin(docsAll.filter(!isInc &&
+            col("doc_id") >= lo && col("doc_id") < hi))
           val ((out2, rows), w) = timedDay(
             graft.operators.TrainingData.loadDurablePipelineState(spark, dDir), chunk)
           val (_, wSave) = measure(
@@ -1021,7 +1021,7 @@ object ScaleSmoke {
             f"saveSec=${wSave.sec}%.2f ${io(w, wSave)}")
         }
         (0 until 5).foreach { k =>
-          val dayDf = docsAll.filter(isInc && dayOf === k).localCheckpoint(true)
+          val dayDf = graft.operators.Materialized.pin(docsAll.filter(isInc && dayOf === k))
           val ((out2, rows), w) = timedDay(
             graft.operators.TrainingData.loadDurablePipelineState(spark, dDir), dayDf)
           val (_, wSave) = measure(graft.operators.TrainingData.appendPipelineDay(spark, dDir,
@@ -1045,7 +1045,7 @@ object ScaleSmoke {
           val (st, wLoad) = measure(
             graft.operators.TrainingData.loadDurablePipelineState(spark, cDir))
           val ((refeed, rows), wDay) =
-            timedDay(st, docsAll.filter(isInc && dayOf === 4).localCheckpoint(true))
+            timedDay(st, graft.operators.Materialized.pin(docsAll.filter(isInc && dayOf === 4)))
           graft.operators.Materialized.free(refeed.admitted)
           println(f"SMOKE pipebf_compact    rows=$rows%-7d sec=${wCompact.sec}%.2f " +
             f"loadSec=${wLoad.sec}%.2f refeedSec=${wDay.sec}%.2f ${io(wCompact, wLoad, wDay)}")
@@ -1063,7 +1063,7 @@ object ScaleSmoke {
         println(f"SMOKE pipeline_save     sec=${wSave.sec}%.2f")
         var st = graft.operators.TrainingData.loadPipelineState(spark, stDir)
         (0 until 5).foreach { k =>
-          val dayDf = docsAll.filter(isInc && dayOf === k).localCheckpoint(true)
+          val dayDf = graft.operators.Materialized.pin(docsAll.filter(isInc && dayOf === k))
           val ((out2, rows), w) = timedDay(st, dayDf)
           st = out2.state
           graft.operators.Materialized.free(out2.admitted)
@@ -1204,13 +1204,14 @@ object ScaleSmoke {
     // (dense near-dup components ⇒ tiny diameter); dedupClusters throws
     // if labels are still moving at maxIter, so reaching the count IS
     // the assertion.
-    // localSolveEdges = 0 pins the DISTRIBUTED loop: the round-10 local
-    // tail solve would otherwise absorb the remainder and the round
+    // localSolveEdges = 0 pins the DISTRIBUTED loop and one contraction
+    // level hands it level 0's remainder: the driver-local solve or
+    // further levels would otherwise absorb the graph and the round
     // bound this smoke exists to measure would be vacuously true.
     if (enabled("q60_tail")) {
       val pairs = graft.ops.Extended.minhashPairs(spark, out).select(col("a"), col("b"))
       val clusters = graft.operators.Approx.dedupClusters(pairs, maxIter = 5,
-        localSolveEdges = 0L).count()
+        maxContractLevels = 1, localSolveEdges = 0L).count()
       println(s"SMOKE q60 converged within 5 rounds ($clusters labeled docs)")
     }
     spark.stop()

@@ -323,14 +323,15 @@ object Extended {
     * pair graph — the VALUE-CHECKED version of the clustering step that
     * turns pairwise near-dup detections into an actionable dedup map
     * (keep the min-id document per component, drop the rest). The Spark
-    * side runs [[graft.operators.Approx.dedupClusters]]' iterative
-    * min-label propagation (O(diameter) rounds of join+agg, both
-    * partitioned by node id — the 100 TB shape); the oracle computes the
-    * same components declaratively with a recursive-CTE transitive
+    * side runs [[graft.operators.Approx.dedupClusters]]: a pair graph
+    * within its driver budget (1M edges; every testdata scale up to
+    * sf0.01) is collected once into a min-root union-find, and a larger
+    * one is star-contracted on the cluster until its remainder fits
+    * (sf0.1: one level, 2.53M pairs → 1613 edges). The oracle computes
+    * the same components declaratively with a recursive-CTE transitive
     * closure, so every (doc, keeper) assignment AND every component size
     * is value-matched. Closure is O(Σ component²) rows — fine for an
-    * oracle at sf0.01, exactly why the Spark side propagates labels
-    * instead. */
+    * oracle at sf0.01, exactly why the Spark side does not use it. */
   def q60DedupClusters(s: SparkSession, d: String): DataFrame = {
     val pairs = minhashPairs(s, d).select(col("a"), col("b"))
     val labels = graft.operators.Approx.dedupClusters(pairs)

@@ -785,6 +785,19 @@ class CapabilitySpec extends SparkSpec {
       s"${leaked.size} checkpoint RDDs left resident — expected at most the final labels")
   }
 
+  test("dedupClusters: q60's build launches at most 5 jobs") {
+    // A pair graph that fits the driver budget is pinned once, counted
+    // once and collected once — no contraction level, no compose join.
+    // q60 at sf0.001 builds in 5 jobs on this session (the pair
+    // pipeline's AQE stages included); contracting first took 22, so a
+    // regression to it fails here.
+    val (_, work) = Bench.measure(spark) { () =>
+      SparkEntry.queries("q60_dedup_clusters")(spark, sf0001)
+    }
+    assert(work.jobs >= 1, "q60 must still cluster while it is built")
+    assert(work.jobs <= 5, s"q60's build launched ${work.jobs} jobs")
+  }
+
   test("dedupClusters under a checkpoint dir pins durably and matches the local path") {
     import spark.implicits._
     // On a real cluster localCheckpoint storage dies with its executor;

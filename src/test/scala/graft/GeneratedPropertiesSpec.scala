@@ -186,24 +186,29 @@ class GeneratedPropertiesSpec extends SparkSpec {
   }
 
   test("dedupClusters equals driver-side union-find on arbitrary graphs") {
-    // The strongest guard on the two-phase (contract + propagate)
-    // clustering: for ANY edge set — dense near-clique blobs, sparse
-    // bridges, long paths, isolated pairs — every node must map to the
-    // exact minimum id of its connected component. The reference is an
-    // independent driver-side union-find over the same edges.
+    // The strongest guard on the clustering: for ANY edge set — dense
+    // near-clique blobs, sparse bridges, long paths, isolated pairs,
+    // self-loops, duplicate pairs, either orientation, no edges at all —
+    // every node must map to the exact minimum id of its connected
+    // component. The reference is an independent driver-side union-find
+    // over the same edges; a node seen only in a self-loop is its own
+    // singleton cluster.
     import spark.implicits._
     val graphGen: Gen[List[(Long, Long)]] = for {
       n <- Gen.choose(2, 60)                     // node universe 0..n-1
-      m <- Gen.choose(1, 120)
+      m <- Gen.choose(0, 120)
       edges <- Gen.listOfN(m, for {
         a <- Gen.choose(0L, n - 1L)
-        b <- Gen.choose(0L, n - 1L) if a != b
-      } yield (math.min(a, b), math.max(a, b)))
-    } yield edges.distinct
+        b <- Gen.choose(0L, n - 1L)              // a == b and a > b included
+      } yield (a, b))
+      dups <- Gen.choose(0, 10)
+    } yield edges ++ edges.take(dups)            // repeated pairs
     val cases = samples(graphGen, 12) :+
       (0L until 45L).map(i => (i, i + 1)).toList :+          // one long path
-      (for (a <- 0L until 12L; b <- (a + 1) until 12L) yield (a, b)).toList // one clique
-    for ((edges, i) <- cases.zipWithIndex if edges.nonEmpty) {
+      (for (a <- 0L until 12L; b <- (a + 1) until 12L) yield (a, b)).toList :+ // one clique
+      List((1L, 0L), (1L, 0L), (0L, 1L), (7L, 7L), (2L, 3L), (3L, 3L)) :+ // loops, repeats
+      Nil                                                    // no edges
+    for ((edges, i) <- cases.zipWithIndex) {
       // driver-side union-find
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -215,29 +220,30 @@ class GeneratedPropertiesSpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val want = parent.keys.map(x => x -> find(x)).toMap
-      val got = graft.operators.Approx.dedupClusters(edges.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"case $i (${edges.size} edges)")
-      // Same graphs through FORCED multi-level contraction
-      // (minContractEdges = 1 overrides the dispatch-cost floor that
-      // keeps small graphs single-level): the composed level maps must
-      // reproduce the identical clustering — this is the correctness
-      // guard on the round-10 iterated-star path, which the defaults
-      // only exercise at >100k-edge remainders.
-      val gotMulti = graft.operators.Approx.dedupClusters(edges.toDF("a", "b"),
-          maxContractLevels = 4, minContractEdges = 1L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotMulti === want, s"multi-level case $i (${edges.size} edges)")
-      // Same graphs with the driver-local tail solve DISABLED
-      // (localSolveEdges = 0): these small graphs otherwise all take
-      // the round-10 local union-find tail, and the distributed
-      // pointer-doubling loop would lose its arbitrary-graph coverage
-      // (it still owns every remainder that stalls above the collect
-      // budget in production).
-      val gotLoop = graft.operators.Approx.dedupClusters(edges.toDF("a", "b"),
-          localSolveEdges = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotLoop === want, s"distributed-loop case $i (${edges.size} edges)")
+      def check(path: String, df: org.apache.spark.sql.DataFrame): Unit = {
+        assert(df.schema.map(f => f.name -> f.dataType) ===
+          Seq("doc_id" -> org.apache.spark.sql.types.LongType,
+              "cluster_id" -> org.apache.spark.sql.types.LongType), s"$path case $i schema")
+        val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1))
+        assert(rows.length === want.size, s"$path case $i: one row per node")
+        assert(rows.toMap === want, s"$path case $i (${edges.size} edges)")
+      }
+      val pairs = edges.toDF("a", "b")
+      // Default budget: every one of these graphs is solved on the
+      // driver at level 0, with no contraction.
+      check("local", graft.operators.Approx.dedupClusters(pairs))
+      // A budget one below the edge count forces one contraction level,
+      // and its remainder always fits: each component's minimum keeps
+      // only self-loops after the level, so a graph with edges loses at
+      // least one. This is the contract-then-local-tail path.
+      check("contract+local", graft.operators.Approx.dedupClusters(pairs,
+        localSolveEdges = math.max(0L, edges.size - 1L)))
+      // No driver budget: contraction levels run while the graph keeps
+      // shrinking (multi-level on most of these), and whatever survives
+      // goes through the distributed pointer-doubling loop (the long
+      // path stalls under the 0.7 shrink rule and always reaches it).
+      check("contract+loop", graft.operators.Approx.dedupClusters(pairs,
+        localSolveEdges = 0L))
     }
   }
 
