@@ -17,11 +17,10 @@ object Bench {
   /** What one [[measure]] window did. `jobs` counts QUERY-EXECUTION
     * jobs only (see [[measure]]); the task figures sum every task of
     * every other job started in the window — executor CPU (run plus
-    * deserialize), shuffle-write bytes and records, disk spill, and each
-    * task's duration in ms. `wallNs` times `mk()` alone, not the flush. */
+    * deserialize), shuffle-write bytes and disk spill. `wallNs` times
+    * `mk()` alone, not the flush. */
   final case class Work(jobs: Int, wallNs: Long, cpuNs: Long,
-                        shuffleWriteBytes: Long, shuffleRecords: Long,
-                        spillBytes: Long, taskMs: Seq[Long]) {
+                        shuffleWriteBytes: Long, spillBytes: Long) {
     def sec: Double = wallNs / 1e9
   }
 
@@ -61,8 +60,7 @@ object Bench {
     val sc = spark.sparkContext
     val sentinelGroup = "graft-bench-probe-" + java.util.UUID.randomUUID()
     val jobs = new AtomicInteger(0)
-    val cpuNs, shuffleBytes, shuffleRecs, spill = new AtomicLong(0)
-    val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val cpuNs, shuffleBytes, spill = new AtomicLong(0)
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -83,9 +81,7 @@ object Bench {
         if (m != null && stages.contains(te.stageId)) {
           cpuNs.addAndGet(m.executorCpuTime + m.executorDeserializeCpuTime)
           shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shuffleRecs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
           spill.addAndGet(m.diskBytesSpilled)
-          if (te.taskInfo != null) taskMs.add(te.taskInfo.duration)
         }
       }
     }
@@ -106,8 +102,7 @@ object Bench {
       val flushed =
         sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS)
       (built, Work(if (flushed) jobs.get() else -1, wallNs, cpuNs.get(),
-        shuffleBytes.get(), shuffleRecs.get(), spill.get(),
-        taskMs.toArray(Array.empty[java.lang.Long]).toSeq.map(_.longValue)))
+        shuffleBytes.get(), spill.get()))
     } finally sc.removeSparkListener(listener)
   }
 

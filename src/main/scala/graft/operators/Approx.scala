@@ -1373,11 +1373,11 @@ object Approx {
   }
 
   /** Phase 2 of [[dedupClusters]]: iterative min-label propagation with
-    * pointer doubling over an undirected pair set (columns a, b). Runs
-    * on the CONTRACTED graph — the sparse remainder after star
-    * contraction — so the per-round O(E) is over bridges and paths, not
-    * the dense family cliques. Converges in O(log diameter) rounds;
-    * throws on non-convergence within maxIter. */
+    * hooking and pointer doubling over an undirected pair set (columns
+    * a, b). Runs on the CONTRACTED graph — the sparse remainder after
+    * star contraction — so the per-round O(E) is over bridges and paths,
+    * not the dense family cliques. Throws on non-convergence within
+    * maxIter. */
   private def propagateComponents(sess: SparkSession, pairs: DataFrame,
                                   maxIter: Int, edgeParts: Int): DataFrame = {
     val tick = new CcTicker("loop")
@@ -1443,13 +1443,28 @@ object Approx {
       // the label forest). Label values are always node ids inside the
       // same component, so the hop can never cross components and the
       // fixed point (labels constant across every edge ⇒ component-min
-      // everywhere) is unchanged — but the distance a min travels per
-      // round compounds, so convergence needs O(log diameter) rounds,
-      // not O(diameter). Both union branches reuse the checkpointed
-      // labels as-is (hash(id), sorted); the only added movement is the
-      // O(nodes) exchange of the hop's probe side by label value.
+      // everywhere) is unchanged — but the distance a min travels along
+      // a label tree per round compounds. The branches reuse the
+      // checkpointed labels as-is (hash(id), sorted); the added movement
+      // is O(nodes): the hop's probe side by label value and the hook's
+      // offers by root.
       val base = edges.join(labels, edges("y") === labels("id"))
         .select(col("x"), col("label"))
+      val nbr = base.groupBy(col("x")).agg(min(col("label")).as("label"))
+      // Hooking (FastSV: Zhang, Azad & Hu, SIAM PP 2020): every edge
+      // (x, y) also offers label(y) to the node label(x), so a whole
+      // label tree moves onto a smaller neighbouring one in one round.
+      // Without it, nothing joins two trees but their boundary edge: on
+      // a path with many local minima the labels settle into one tree
+      // per local minimum and the component minimum then crosses one
+      // edge per round (a 40-node path with ids (i · 7919) mod 40 did
+      // not converge in 20 rounds). The offers go through the neighbour
+      // minimum `nbr` (min over x's edges of label(y)), so the hook is
+      // one O(nodes) join, not an O(E) one. Offered values are ids from
+      // the same component, so the fixed point is unchanged.
+      val hook = nbr.join(labels.select(col("id").as("hx"), col("label").as("root")),
+          col("x") === col("hx"))
+        .select(col("root").as("x"), col("label"))
       // The hop is provably a no-op in the first two rounds: after the
       // seed, label(x) is the min of x's closed 1-ball, and inductively
       // label(label(x))'s reach stays inside the ball the neighbour
@@ -1459,12 +1474,12 @@ object Approx {
       // there drops its exchange from the two rounds every graph pays
       // for, while deep-diameter graphs still get the exponential
       // reach growth from round 3 on.
-      val cand = if (i <= 2) base else {
+      val cand = if (i <= 2) nbr.union(hook) else {
         val grand = labels.select(col("id").as("gx"), col("label").as("gl"))
           .join(labels.select(col("id").as("hid"), col("label").as("hl")),
             col("gl") === col("hid"))
           .select(col("gx").as("x"), col("hl").as("label"))
-        base.union(grand)
+        nbr.union(hook).union(grand)
       }
       val prop = cand
         .groupBy(col("x").as("pid")).agg(min(col("label")).as("nlabel"))

@@ -503,11 +503,13 @@ object TrainingData {
   // were built for.
 
   /** Everything a daily ingest carries between [[advanceTrainingSet]]
-    * calls. All frames are plain tables — persist with
-    * [[savePipelineState]] / reload with [[loadPipelineState]]
-    * (checkpoint granularity; a per-day durable deployment appends
-    * each day's fold as `batch_id=` partitions through
-    * [[graft.sources.StateStore]], the streaming twins' proven seam).
+    * calls. All frames are plain tables. The one on-disk form is the
+    * durable store: [[initDurablePipelineState]] once, then per day
+    * [[loadDurablePipelineState]] → [[advanceTrainingSet]] →
+    * [[appendPipelineDay]], which appends the day's folds as
+    * `batch_id=` partitions through [[graft.sources.StateStore]] (the
+    * streaming twins' seam); [[compactPipelineState]] rolls a
+    * generation.
     *
     *  - `fingerprints` — (clean_fp) of every quality-passing ingested
     *    doc: the exact-dedup screen's index (fp equality IS transitive,
@@ -535,9 +537,9 @@ object TrainingData {
 
   /** ONE day's fold increments — the O(day) frames
     * [[advanceTrainingSet]] unioned into the returned state, exposed
-    * separately so a durable loop can persist the day as `batch_id=`
-    * partition appends ([[appendPipelineDay]]) instead of the
-    * O(state) rewrite [[savePipelineState]] pays. Every frame is
+    * separately so a durable loop persists the day as `batch_id=`
+    * partition appends ([[appendPipelineDay]]) — O(day) writes, never
+    * an O(state) rewrite. Every frame is
     * already pinned by the day's run (writing it re-reads
     * materialized blocks, no recompute):
     *  - `fps` — the day's KEPT fingerprints (day-unique,
@@ -720,9 +722,10 @@ object TrainingData {
     *
     * State lineage: the returned state's new branches are
     * pinned day frames; the state frames accumulate one
-    * union level per day — bound a LONG-lived driver loop with
-    * [[savePipelineState]] / [[loadPipelineState]] (which also makes
-    * the loop restartable) on whatever cadence its plan-analysis cost
+    * union level per day — a LONG-lived loop reloads its state from
+    * the durable store instead ([[appendPipelineDay]] each day,
+    * [[loadDurablePipelineState]] before the next, which also makes
+    * the loop restartable), on whatever cadence its plan-analysis cost
     * warrants. */
   def advanceTrainingSet(spark: SparkSession, state: PipelineState,
                          dayDocs: DataFrame, benchmark: DataFrame,
@@ -958,58 +961,11 @@ object TrainingData {
       health = if (report) Some(ingestHealth(newState)) else None)
   }
 
-  /** Persist a [[PipelineState]] (full-rewrite, checkpoint
-    * granularity — for per-day O(day) durability use
-    * [[initDurablePipelineState]] / [[appendPipelineDay]] /
-    * [[loadDurablePipelineState]], which append each day's fold frames
-    * as `batch_id=` partitions). Empty frames write through one empty
-    * task so the read-back never hits a data-less directory. */
-  def savePipelineState(spark: SparkSession, state: PipelineState,
-                        dir: String): Unit = {
-    def writeTable(df: DataFrame, path: String): Unit = {
-      val out = if (df.isEmpty) df.repartition(1) else df
-      out.write.mode("overwrite").parquet(path)
-    }
-    writeTable(state.fingerprints, s"$dir/fingerprints")
-    writeTable(state.minhash.sets, s"$dir/sets")
-    writeTable(state.minhash.bands, s"$dir/bands")
-    state.window.foreach(w => writeTable(w, s"$dir/window"))
-    state.semantic.foreach { s =>
-      writeTable(s.vectors, s"$dir/vectors")
-      writeTable(Approx.semanticCentroidsDF(spark, s.centroids), s"$dir/centroids")
-    }
-    import spark.implicits._
-    writeTable(state.ledger.toSeq.toDF("lang", "used_tokens"), s"$dir/ledger")
-  }
-
-  /** Reload a [[savePipelineState]] directory. The optional stages'
-    * presence is the directory's (window/vectors exist or not), so the
-    * loop resumes with exactly the stages it was running. */
-  def loadPipelineState(spark: SparkSession, dir: String): PipelineState = {
-    def has(p: String) = graft.sources.StateStore.exists(spark, p)
-    PipelineState(
-      fingerprints = spark.read.parquet(s"$dir/fingerprints"),
-      minhash = Approx.MinHashIndex(
-        spark.read.parquet(s"$dir/sets"), spark.read.parquet(s"$dir/bands")),
-      window =
-        if (has(s"$dir/window")) Some(spark.read.parquet(s"$dir/window"))
-        else None,
-      semantic =
-        if (has(s"$dir/vectors"))
-          Some(Approx.SemanticIndex(spark.read.parquet(s"$dir/vectors"),
-            Approx.semanticCentroidsFromDF(
-              spark.read.parquet(s"$dir/centroids"))))
-        else None,
-      ledger = spark.read.parquet(s"$dir/ledger").collect()
-        .map(r => r.getAs[String]("lang") -> r.getAs[Long]("used_tokens")).toMap)
-  }
-
   // =====================================================================
   // PER-DAY durable state (round 16): the `batch_id=` append seam
   // applied to the COMPOSED pipeline. A long-lived ingest loop does
   //   init once → { load → advanceTrainingSet → append(day) } per day
-  // paying O(day) writes per day instead of savePipelineState's
-  // O(state) rewrite, and a restart resumes from the last fully
+  // paying O(day) writes per day, and a restart resumes from the last fully
   // appended day (dynamic partition overwrite makes a RETRIED day
   // replace its own partitions — idempotent, the StateStore contract).
   // A crash strictly between a day's partition writes leaves that day

@@ -208,8 +208,8 @@ class GeneratedPropertiesSpec extends SparkSpec {
       (for (a <- 0L until 12L; b <- (a + 1) until 12L) yield (a, b)).toList :+ // one clique
       List((1L, 0L), (1L, 0L), (0L, 1L), (7L, 7L), (2L, 3L), (3L, 3L)) :+ // loops, repeats
       Nil                                                    // no edges
-    for ((edges, i) <- cases.zipWithIndex) {
-      // driver-side union-find
+    // driver-side union-find
+    def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         val p = parent.getOrElseUpdate(x, x)
@@ -219,7 +219,10 @@ class GeneratedPropertiesSpec extends SparkSpec {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val want = parent.keys.map(x => x -> find(x)).toMap
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    for ((edges, i) <- cases.zipWithIndex) {
+      val want = components(edges)
       def check(path: String, df: org.apache.spark.sql.DataFrame): Unit = {
         assert(df.schema.map(f => f.name -> f.dataType) ===
           Seq("doc_id" -> org.apache.spark.sql.types.LongType,
@@ -244,6 +247,17 @@ class GeneratedPropertiesSpec extends SparkSpec {
       // path stalls under the 0.7 shrink rule and always reaches it).
       check("contract+loop", graft.operators.Approx.dedupClusters(pairs,
         localSolveEdges = 0L))
+    }
+    // Scrambled paths, ids (i · 7919) mod n along the path: star
+    // contraction stalls on them, and the loop then sees one label tree
+    // per local minimum. Without hooking the component minimum crosses
+    // one edge per round, and both ran out of the default 20 rounds.
+    for (n <- Seq(40L, 1000L)) {
+      val edges = (0L until n - 1).map(i => ((i * 7919) % n, ((i + 1) * 7919) % n)).toList
+      val got = graft.operators.Approx.dedupClusters(edges.toDF("a", "b"),
+          localSolveEdges = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === components(edges), s"contract+loop scrambled path of $n nodes")
     }
   }
 

@@ -343,9 +343,9 @@ class TrainingDataSpec extends SparkSpec {
     // The product guarantee: a daily ingest that screens, admits, and
     // advances all the indexes reproduces — under id-monotone day
     // boundaries and non-binding budgets — exactly what one call over
-    // the whole increment produces, with a parquet save/load of the
-    // ENTIRE pipeline state (all three indexes + fingerprints +
-    // ledger) and an empty day planted mid-replay.
+    // the whole increment produces, with the ENTIRE pipeline state (all
+    // three indexes + fingerprints + ledger) round-tripped through the
+    // durable store and an empty day planted mid-replay.
     val docs = graft.ops.Tables.documents(spark, sf0001)
       .select("doc_id", "text", "lang")
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
@@ -366,24 +366,29 @@ class TrainingDataSpec extends SparkSpec {
     val single = day(init(), docs)
     val singleAdm = admittedTriples(single.admitted)
     assert(singleAdm.nonEmpty)
-    // 3 id-monotone days (+ one EMPTY day in the middle), state saved
-    // and reloaded through parquet between days 2 and 3.
+    // 3 id-monotone days (+ one EMPTY day in the middle), each day's
+    // folds appended to the durable store, and day 3 run against the
+    // state loaded back from it.
     import spark.implicits._
     val ids = docs.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
     val emptyDay = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "lang")
+    val stDir = java.nio.file.Files.createTempDirectory("graft_pstate").toString
+    TrainingData.initDurablePipelineState(spark, stDir,
+      substrK = Some(8), semCentroids = Some(cents))
     var st = init()
     val adm = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     val d1 = day(st, docs.filter(col("doc_id") <= cuts(0))); st = d1.state
+    TrainingData.appendPipelineDay(spark, stDir, 0L, d1.folds)
     adm ++= admittedTriples(d1.admitted)
     val dEmpty = day(st, emptyDay); st = dEmpty.state
+    TrainingData.appendPipelineDay(spark, stDir, 1L, dEmpty.folds)
     assert(dEmpty.admitted.count() === 0L, "an empty day admitted rows")
     val d2 = day(st,
       docs.filter(col("doc_id") > cuts(0) && col("doc_id") <= cuts(1)))
-    st = d2.state; adm ++= admittedTriples(d2.admitted)
-    val stDir = java.nio.file.Files.createTempDirectory("graft_pstate").toString
-    TrainingData.savePipelineState(spark, st, stDir)
-    st = TrainingData.loadPipelineState(spark, stDir)
+    TrainingData.appendPipelineDay(spark, stDir, 2L, d2.folds)
+    adm ++= admittedTriples(d2.admitted)
+    st = TrainingData.loadDurablePipelineState(spark, stDir)
     val d3 = day(st, docs.filter(col("doc_id") > cuts(1)))
     adm ++= admittedTriples(d3.admitted)
     assert(adm.sortBy(_._1).toSeq === singleAdm,
