@@ -190,8 +190,8 @@ object ScaleSmoke {
     // ---- shared inputs: the 99% index corpus, the 1% increment split
     // into 5 id-monotone days, and the stored indexes over the 99%,
     // built and written once outside every timer (the amortized part) ----
-    val docsAll = spark.read.parquet(s"$out/documents.parquet")
-      .select("doc_id", "text", "lang")
+    val corpus = spark.read.parquet(s"$out/documents.parquet")
+    val docsAll = corpus.select("doc_id", "text", "lang")
     val docs = docsAll.select("doc_id", "text")
     val vecs = spark.read.parquet(s"$out/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -305,8 +305,7 @@ object ScaleSmoke {
     // therefore measures the mass exactly (linear work) at every scale
     // and runs the full join only where the mass fits the sandbox; the
     // q59 banded family (collision ≈ J⁴) is the 100 TB path.
-    val docsDf = spark.read.parquet(s"$out/documents.parquet")
-    lazy val mass = Approx.minHashCandidateMass(spark, docsDf)
+    lazy val mass = Approx.minHashCandidateMass(spark, corpus)
     if (enabled("q43") || enabled("neardup_auto"))
       println(f"SMOKE q43 ML-LSH candidate mass = $mass%,d pairs at ${copies}x " +
         f"(quadratic in corpus by construction; the q59 banded family stays linear)")
@@ -314,7 +313,7 @@ object ScaleSmoke {
     // OR-banded arm at 10×, the AND-banded family once the mass exceeds
     // the measured 1e8 budget (30×).
     run("neardup_auto") {
-      Approx.nearDupAuto(spark, docsDf, minJaccard = 0.8, knownMass = Some(mass))
+      Approx.nearDupAuto(spark, corpus, minJaccard = 0.8, knownMass = Some(mass))
     }
     if (enabled("q43_minhash_neardup")) {
       if (mass <= 100000000L)
@@ -330,8 +329,7 @@ object ScaleSmoke {
     // quadratic within-cell term — stays constant. The counted rows are
     // the NON-KEEPER docs, i.e. what a dedup pass would drop.
     run("semantic_dedup") {
-      Approx.semanticDedup(spark.read.parquet(s"$out/embeddings.parquet"),
-          minSim = 0.98, nlist = 8 * copies)
+      Approx.semanticDedup(vecs, minSim = 0.98, nlist = 8 * copies)
         .filter(!col("is_keeper"))
     }
 
@@ -343,8 +341,7 @@ object ScaleSmoke {
     // Packing a SHUFFLED stream (the buildTrainingSet order): the range
     // layout carries one extra 32-char key per doc and nothing else
     // changes.
-    val sizedShuf = spark.read.parquet(s"$out/documents.parquet")
-      .select(col("doc_id"),
+    val sizedShuf = corpus.select(col("doc_id"),
         expr("size(filter(split(text, '\\\\s+'), w -> w != ''))")
           .cast("long").as("n_tokens"),
         md5(concat_ws(":", lit("pk"), col("doc_id").cast("string"))).as("prk"))
@@ -354,8 +351,7 @@ object ScaleSmoke {
     // The global rank of shuffleShards is the same two-phase form over
     // (id, md5) pairs — wall near-flat, rows = ids.
     runPinned("shuffle_shards") {
-      Seq(graft.operators.Sharding.shuffleShards(
-        spark.read.parquet(s"$out/documents.parquet").select("doc_id"),
+      Seq(graft.operators.Sharding.shuffleShards(corpus.select("doc_id"),
         nShards = 64, idCol = "doc_id"))
     }
     // Budget = 3.5× the corpus mass at EVERY scale, so the fan-out
